@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 # Below this node count the per-round join sides are broadcast-sized and
@@ -564,12 +564,27 @@ def pagerank(
     sides are broadcast-sized and the frames stay plain checkpoints
     (measured: pre-partitioning is pure overhead there).
 
-    The dangling-mass correction stays fully distributed: nodes carry a
-    precomputed ``_has_out`` flag, the per-round dangling sum is a 1-row
-    aggregate over the (checkpointed) rank frame, and it re-enters the
-    update as a broadcast crossJoin — so one round is ONE Spark job
-    (the eager localCheckpoint) with no driver-side scalar sync and no
-    extra left-anti pass over the rank frame.
+    The dangling-mass correction costs no job of its own: nodes carry a
+    precomputed ``_has_out`` flag, each round's eager localCheckpoint
+    observes (``Dataset.observe``) the mass its dangling nodes hold, and
+    the next round reads that scalar as a literal. Setup is three eager
+    checkpoints (distinct edges; nodes, whose node / teleport-set /
+    dangling-seed counts ride on the same job; the degree-annotated
+    edges). Measured jobs per round: AQE off, 1 on a 7-edge toy graph
+    (the checkpoint) and 2 on the q84 and q130 graphs (plus a broadcast
+    of one side of the ranks⋈edges join); AQE on, 5 on the q84 and q130
+    graphs and 7 on the toy, because AQE runs every shuffle-map stage
+    and broadcast as its own job.
+
+    The literal is part of the generated code, so a round whose dangling
+    mass was never seen before compiles one new whole-stage class
+    (measured: 22 Janino compiles per q84 call on an unseen input, 0 on a
+    repeated one; the observed sum adds task partials in completion
+    order, so over a multi-partition rank frame a repeated call can
+    differ in the last bits and compile again). Feeding the scalar
+    through a one-row broadcast relation instead compiles nothing new
+    but adds a job per round, and measured ~25 % more CPU per q84 call
+    even on unseen inputs (local[4], sf0.01-sized lineitem).
 
     Float caveat (why the registry entry is rows-only): per-node sums
     are partition-order-dependent doubles, so cross-engine comparison
@@ -581,12 +596,17 @@ def pagerank(
     return both land uniformly on the seed set instead of all nodes —
     the standard random-walk-with-restart relevance score. Plan shape
     is unchanged: the seed flag is one extra broadcast-joined boolean
-    on the node frame; iterations stay one job each. The initial rank
-    is uniform over seeds (non-seeds start at 0).
+    on the node frame, and a round runs the same jobs as a plain one.
+    The initial rank is uniform over seeds (non-seeds start at 0).
     """
-    e = edges.select(
-        F.col(src).cast("long").alias("_src"), F.col(dst).cast("long").alias("_dst")
-    ).distinct()
+    e = (
+        edges.select(
+            F.col(src).cast("long").alias("_src"),
+            F.col(dst).cast("long").alias("_dst"),
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     out_deg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg"))
     nodes = (
         e.select(F.col("_src").alias("node"))
@@ -615,11 +635,19 @@ def pagerank(
         )
     else:
         nodes = nodes.withColumn("_is_seed", F.lit(True))
-    nodes = nodes.localCheckpoint(eager=True)
-    n = nodes.count()
-    if n == 0:
+    # node, teleport-set and dangling-seed counts ride on the checkpoint
+    # job itself (Dataset.observe) instead of three count() jobs
+    setup = Observation()
+    nodes = nodes.observe(
+        setup,
+        F.count(F.lit(1)).alias("n"),
+        F.count_if("_is_seed").alias("n_tele"),
+        F.count_if(F.col("_is_seed") & ~F.col("_has_out")).alias("n_dangling_seeds"),
+    ).localCheckpoint(eager=True)
+    counts = setup.get
+    if counts["n"] == 0:
         return nodes.select("node").withColumn("rank", F.lit(0.0))
-    n_tele = n if seeds is None else nodes.filter(F.col("_is_seed")).count()
+    n_tele = counts["n_tele"]
     if n_tele == 0:
         raise ValueError("personalized pagerank: no seed appears in the graph")
     # Scale-adaptive static-frame layout (guide §2.4): at cluster scale the
@@ -636,17 +664,19 @@ def pagerank(
     # sides are sort-merge and pinning pays; _PREPARTITION_MIN_NODES <= 0
     # means "adaptive path disabled", and an explicit conf/env setting
     # (true OR false) always wins — see _pin_static.
-    adaptive = 0 < _PREPARTITION_MIN_NODES <= n
+    adaptive = 0 < _PREPARTITION_MIN_NODES <= counts["n"]
     nodes, _pins_n = _pin_static(nodes, "node", local=None, adaptive=adaptive)
     ed, _pins_e = _pin_static(
         e.join(out_deg, "_src"), "_src", local="ckpt", adaptive=adaptive
     )
     _pinned = _pins_n + _pins_e
     try:
-        ranks = nodes.withColumn(
-            "rank",
-            F.when(F.col("_is_seed"), F.lit(1.0 / n_tele)).otherwise(F.lit(0.0)),
-        )
+        tele = F.when(F.col("_is_seed"), F.lit(1.0 / n_tele)).otherwise(F.lit(0.0))
+        ranks = nodes.withColumn("rank", tele)
+        # dangling mass of the current ranks: every seed starts at
+        # 1/n_tele, then each round's value is observed on that round's
+        # checkpoint and enters the next round as a scalar
+        dangling = counts["n_dangling_seeds"] / n_tele
         for _ in range(iterations):
             contrib = (
                 ranks.join(ed, ranks.node == ed._src)
@@ -657,31 +687,26 @@ def pagerank(
                 .groupBy("node")
                 .agg(F.sum("c").alias("in_rank"))
             )
-            # dangling mass: rank held by nodes with no out-edges, summed
-            # in the same job and broadcast back as a single row
-            dangling = ranks.agg(
-                F.coalesce(
-                    F.sum(F.when(~F.col("_has_out"), F.col("rank"))), F.lit(0.0)
-                ).alias("_dangling")
-            )
-            tele = F.when(F.col("_is_seed"), F.lit(1.0 / n_tele)).otherwise(
-                F.lit(0.0)
-            )
+            held = Observation()
             ranks = (
                 nodes.join(contrib, "node", "left")
-                .crossJoin(F.broadcast(dangling))
                 .select(
                     "node",
                     "_has_out",
                     "_is_seed",
                     (
                         F.lit(1.0 - damping) * tele
-                        + F.lit(damping) * F.col("_dangling") * tele
+                        + F.lit(damping) * F.lit(dangling) * tele
                         + F.lit(damping) * F.coalesce(F.col("in_rank"), F.lit(0.0))
                     ).alias("rank"),
                 )
+                .observe(
+                    held,
+                    F.sum(F.when(~F.col("_has_out"), F.col("rank"))).alias("d"),
+                )
                 .localCheckpoint(eager=True)
             )
+            dangling = held.get["d"] or 0.0
     finally:
         # every iteration's ranks frame is materialized (checkpointed), so
         # the result no longer depends on the pinned statics

@@ -3,6 +3,25 @@
 The engine itself never assumes session ownership — every transform takes
 an explicit SparkSession or DataFrame, so the driver can inject its own.
 This factory is for tests and bench.py.
+
+Both this factory and `cluster_conf` set the whole-stage codegen cache
+(`CODEGEN_CONF`). The iterative graph operators run many small jobs
+whose plans repeat round after round and call after call, and each
+stage's generated Java is compiled by Janino before it runs:
+
+- ``spark.sql.codegen.useIdInClassName=false`` keeps the stage id out
+  of the generated class name (``GeneratedIteratorForCodegenStage<N>``),
+  so identical stage bodies produce identical source and share one
+  compiled class instead of one per stage id.
+- ``spark.sql.codegen.cache.maxEntries`` (static: read once per JVM)
+  bounds the cache of compiled classes, keyed by source. Spark's default
+  of 100 is smaller than one pass over the q84/q87/q63 graph queries
+  (116 distinct bodies), so every warm pass recompiled ~120 of them; at
+  1000 a warm pass compiles none. Measured at sf0.1 on local[4] over
+  the 40 slowest bench queries (``tools/opt_measure.py --top 40
+  --passes 2``): the largest single query needs 107 bodies (q160), the
+  40 together 1132; the second pass of each compiles 24 in all at 1000
+  against 226 at 100, with the same driver peak RSS.
 """
 
 from __future__ import annotations
@@ -10,6 +29,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CODEGEN_CONF = {
+    "spark.sql.codegen.useIdInClassName": "false",
+    "spark.sql.codegen.cache.maxEntries": "1000",
+}
 
 
 def get_spark(
@@ -33,7 +57,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**CODEGEN_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -62,6 +86,8 @@ def cluster_conf(
       eviction — the defaults' in-heap map ooms first at this scale.
     - dynamic partition overwrite: idempotent re-runs replace only
       touched partitions (`sinks.overwrite_partitions`).
+    - codegen cache (`CODEGEN_CONF`, module docstring): each executor
+      JVM compiles a stage body once instead of once per stage id.
     """
     cores = executors * cores_per_executor
     shuffle_parts = max(cores * 2, int(target_input_tb * 1024 * 1024 / 128))
@@ -90,4 +116,5 @@ def cluster_conf(
         # broadcast-sized there and pre-partitioning is measured pure
         # overhead (operators/graph.py:_pin_static).
         "spark.graphsense.prepartitionStatic": "true",
+        **CODEGEN_CONF,
     }

@@ -378,8 +378,9 @@ def test_pagerank_matches_dense_reference(spark):
     float tolerance (same damping, same dangling redistribution)."""
     from graphsense_blocksci_spark.operators.graph import pagerank
 
-    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 4), (5, 1)]
-    # node 6 unreachable sink target to exercise dangling: 4->4 self loop
+    # node 6 is a sink (no out-edge): its rank is the dangling mass the
+    # correction redistributes every round
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 4), (5, 1), (2, 6)]
     df = spark.createDataFrame(edges, "src: long, dst: long")
     got = {r["node"]: r["rank"] for r in pagerank(df, iterations=12).collect()}
 
@@ -468,7 +469,8 @@ def test_personalized_pagerank_matches_dense_reference(spark):
     mass still sums to 1 and non-seed sources decay."""
     from graphsense_blocksci_spark.operators.graph import pagerank
 
-    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 4), (5, 1)]
+    # node 6 is a sink (no out-edge): its rank returns to the seeds
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 4), (5, 1), (2, 6)]
     df = spark.createDataFrame(edges, "src: long, dst: long")
     seeds = spark.createDataFrame([(1,), (3,)], "node: long")
     got = {

@@ -60,6 +60,12 @@ def test_pagerank_min_nodes_zero_disables_adaptive(spark, monkeypatch):
     assert base == pinned
 
 
+def _cached_entries(spark) -> int:
+    """Persisted frames registered in the session's SQL CacheManager
+    (DataFrame.persist registers there; localCheckpoint RDDs do not)."""
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
 def test_hits_pin_parity_and_release(spark, monkeypatch):
     """hits under the forced cluster profile must return the exact
     integer scores of the lazy local path, and must leave no persisted
@@ -70,14 +76,33 @@ def test_hits_pin_parity_and_release(spark, monkeypatch):
         for r in graph.hits(edges, iterations=2).collect()
     }
     monkeypatch.setenv("SPARK_GRAFT_PREPARTITION_STATIC", "1")
+    before = _cached_entries(spark)
     pinned_df = graph.hits(edges, iterations=2)
+    assert _cached_entries(spark) == before, "hits leaked persisted frames"
     pinned = {
         (r["node"], r["authority"], r["hub"]) for r in pinned_df.collect()
     }
     assert base == pinned
-    # the operator released its pins before returning: DataFrame.persist
-    # registers in the SQL CacheManager (localCheckpoint RDDs do not),
-    # so a released pin leaves the cache manager empty
-    assert (
-        spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    ), "hits leaked persisted frames"
+
+
+def test_pagerank_pin_release(spark, monkeypatch):
+    """pagerank under the forced cluster profile pins its node and edge
+    frames and must release both before returning."""
+    edges = _toy_edges(spark)
+    monkeypatch.setenv("SPARK_GRAFT_PREPARTITION_STATIC", "1")
+    before = _cached_entries(spark)
+    ranks = graph.pagerank(edges, iterations=3)
+    assert _cached_entries(spark) == before, "pagerank leaked persisted frames"
+    assert abs(sum(r["rank"] for r in ranks.collect()) - 1.0) < 1e-9
+
+
+def test_hits_zero_iterations_rejected_under_cluster_profile(spark, monkeypatch):
+    """iterations=0 fails with ValueError before anything is pinned,
+    not with an AttributeError from the materialize-and-release step."""
+    import pytest
+
+    monkeypatch.setenv("SPARK_GRAFT_PREPARTITION_STATIC", "1")
+    before = _cached_entries(spark)
+    with pytest.raises(ValueError, match="iterations must be >= 1"):
+        graph.hits(_toy_edges(spark), iterations=0)
+    assert _cached_entries(spark) == before
