@@ -532,13 +532,6 @@ def triangle_count(
     return corners.groupBy("node").agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
-def cluster_sizes(components: DataFrame) -> DataFrame:
-    """Entity sizes: one row per component with its member count."""
-    return components.groupBy("component").agg(
-        F.count(F.lit(1)).alias("n_members")
-    )
-
-
 def pagerank(
     edges: DataFrame,
     iterations: int = 10,

@@ -100,3 +100,15 @@ def pytest_collection_modifyitems(config, items):
         key = item.nodeid.split("/")[-1]  # "<file>.py::[Class::]<name>"
         if key in _SLOW_TESTS or key.split("[")[0] in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+
+
+def pytest_report_header(config):
+    # A bare `pytest` runs the fast tier only; say so up front so a green
+    # fast run is never mistaken for the full battery.
+    if config.getoption("markexpr") == "not slow":
+        return [
+            f"fast tier: deselects the {len(_SLOW_TESTS)} slow tests listed"
+            " in tests/conftest.py",
+            'full tier: python -m pytest tests/ -m ""',
+        ]
+    return []
