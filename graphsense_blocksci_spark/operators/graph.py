@@ -43,6 +43,7 @@ Scale notes:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -61,6 +62,26 @@ from pyspark.sql import functions as F
 _PREPARTITION_MIN_NODES = int(
     os.environ.get("SPARK_GRAFT_PREPARTITION_MIN_NODES", "2000000")
 )
+_MIN_NODES_WARNED = False
+
+
+def _adaptive_pin(n_nodes: int) -> bool:
+    """The node-count pin decision `_pin_static` uses when the profile
+    switch is unset. ``<= 0`` used to mean "pin every graph" and now
+    means "never pin adaptively", so that setting warns once per process
+    and names the force-on spelling."""
+    global _MIN_NODES_WARNED
+    if _PREPARTITION_MIN_NODES > 0:
+        return n_nodes >= _PREPARTITION_MIN_NODES
+    if not _MIN_NODES_WARNED:
+        _MIN_NODES_WARNED = True
+        warnings.warn(
+            f"SPARK_GRAFT_PREPARTITION_MIN_NODES={_PREPARTITION_MIN_NODES}"
+            " now disables the adaptive pin; set"
+            " spark.graphsense.prepartitionStatic=true to force pinning",
+            stacklevel=3,
+        )
+    return False
 
 
 def _shuffle_width(df: DataFrame) -> int:
@@ -407,14 +428,22 @@ def label_propagation(
     rounds; k rounds can never move a label further than k hops.
 
     Scale shape per round: one equi-join (labels ⋈ symmetric edges on
-    the neighbor id) + one (node,label) count aggregate + one per-node
-    window pick — three shuffles, all on node ids, so co-partitioning
+    the neighbor id) + one per-node ``mode(label, deterministic=True)``
+    aggregate, which is exactly the rule above (most frequent label,
+    ties to the lowest). Round 1 needs no join, because every label is
+    still its node id, so it is the aggregate alone. Measured on the q84
+    graph: 3 jobs and 4 stages per round with AQE on, 2 jobs and 3
+    stages with it off. Both shuffles are on node ids, so co-partitioning
     edges by neighbor id keeps the join local. High-degree hubs are
-    handled by the count aggregate's map-side partial (a degree-d hub
-    contributes ≤ #distinct-neighbor-labels rows to the shuffle, not
+    handled by mode's map-side partial (per-label counts: a degree-d hub
+    contributes ≤ #distinct-neighbor-labels entries to the shuffle, not
     d). ``localCheckpoint`` per round keeps lineage flat; nothing
     reaches the driver.
     """
+    if iterations < 1:
+        raise ValueError(
+            f"label_propagation: iterations must be >= 1, got {iterations}"
+        )
     sym = (
         edges.select(
             F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
@@ -425,32 +454,25 @@ def label_propagation(
     sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
     # per-round join key is the neighbor id v (labels ⋈ sym on v)
     sym, _pins = _pin_static(sym, "v")
-    try:
-        labels = sym.select(F.col("u").alias("node")).distinct().withColumn(
-            "label", F.col("node")
+
+    # loop-invariant Column expressions, built once (py4j calls per round)
+    on_v = F.col("v") == F.col("node")
+    out = [F.col("u").alias("node"), "label"]
+
+    def pick(msgs: DataFrame, label: str) -> DataFrame:
+        # deterministic mode = the rule above (ties to the lowest)
+        return (
+            msgs.groupBy("u")
+            .agg(F.mode(label, deterministic=True).alias("label"))
+            .select(*out)
+            .localCheckpoint(eager=True)
         )
-        for _ in range(iterations):
-            freq = (
-                sym.join(labels, sym.v == labels.node)
-                .groupBy("u", "label")
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-            # tie-break pick (max count, then min label) as ONE aggregate:
-            # max_by over the struct (c, -label) orders lexicographically
-            # to exactly the window's (c DESC, label ASC) — but aggregates
-            # get map-side partial merge, where a window would add a full
-            # sort shuffle per round.
-            labels = (
-                freq.groupBy("u")
-                .agg(
-                    F.max_by(
-                        "label",
-                        F.struct(F.col("c"), (-F.col("label")).alias("_nl")),
-                    ).alias("label")
-                )
-                .select(F.col("u").alias("node"), "label")
-                .localCheckpoint(eager=True)
-            )
+
+    try:
+        # round 1 needs no join: every neighbor's label is still its id
+        labels = pick(sym, "v")
+        for _ in range(iterations - 1):
+            labels = pick(sym.join(labels, on_v), "label")
     finally:
         for _f in _pins:
             _f.unpersist(False)
@@ -547,27 +569,33 @@ def pagerank(
     The weighted counterpart of `connected_components`' label passing:
     each round every node ships rank/out_degree along its out-edges,
     contributions are summed per target, and the damping mixes in the
-    uniform teleport. Plan per round: one join of ranks against the
-    (static) out-degree-annotated edges + one groupBy. Above
-    ``_PREPARTITION_MIN_NODES`` the static edge/node frames are
-    repartitioned on their per-round join keys ONCE and persisted
-    (cached plans keep their partitioning under AQE), so the static
-    side of every round's join is exchange-free — the edge frame is
-    shuffled once at setup instead of once per round; below it the
-    sides are broadcast-sized and the frames stay plain checkpoints
-    (measured: pre-partitioning is pure overhead there).
+    uniform teleport. Plan per round, the GraphX superstep shape (one
+    message aggregation per vertex; Gonzalez et al., OSDI 2014): one
+    join of the rank rows against the static edge frame, then ONE
+    ``groupBy(node)`` over those contributions unioned with the rank
+    rows themselves. Rank rows carry the node attributes — ``_deg``
+    (null for a dangling node) and ``_is_seed`` — so the aggregate
+    rebuilds a whole rank row (sum of contributions, max of each
+    attribute) and no node frame is joined per round. Above
+    ``_PREPARTITION_MIN_NODES`` the static edge frame is repartitioned
+    on ``_src`` ONCE and persisted (cached plans keep their
+    partitioning under AQE), so the static side of every round's join
+    is exchange-free — the edge frame is shuffled once at setup instead
+    of once per round; below it the frame is broadcast-sized and stays
+    a plain checkpoint (measured: pre-partitioning is pure overhead
+    there).
 
-    The dangling-mass correction costs no job of its own: nodes carry a
-    precomputed ``_has_out`` flag, each round's eager localCheckpoint
-    observes (``Dataset.observe``) the mass its dangling nodes hold, and
-    the next round reads that scalar as a literal. Setup is three eager
-    checkpoints (distinct edges; nodes, whose node / teleport-set /
-    dangling-seed counts ride on the same job; the degree-annotated
-    edges). Measured jobs per round: AQE off, 1 on a 7-edge toy graph
-    (the checkpoint) and 2 on the q84 and q130 graphs (plus a broadcast
-    of one side of the ranks⋈edges join); AQE on, 5 on the q84 and q130
-    graphs and 7 on the toy, because AQE runs every shuffle-map stage
-    and broadcast as its own job.
+    The dangling-mass correction costs no job of its own: each round's
+    eager localCheckpoint observes (``Dataset.observe``) the mass held
+    by rows with a null ``_deg``, and the next round reads that scalar
+    as a literal. Setup is two eager checkpoints: the distinct edges, and
+    the nodes with their out-degree (one aggregate over both edge ends),
+    whose node / teleport-set / dangling-seed counts ride on the same
+    job. Measured per round on the q84 and q130 graphs: AQE on, 3 jobs
+    and 4 stages (a broadcast of one side of the ranks⋈edges join, the
+    contribution shuffle, the checkpoint), because AQE runs every
+    shuffle-map stage and broadcast as its own job; AQE off, 2 jobs and
+    3 stages, and 1 job on a 7-edge toy graph (the checkpoint).
 
     The literal is part of the generated code, so a round whose dangling
     mass was never seen before compiles one new whole-stage class
@@ -592,6 +620,8 @@ def pagerank(
     on the node frame, and a round runs the same jobs as a plain one.
     The initial rank is uniform over seeds (non-seeds start at 0).
     """
+    if iterations < 1:
+        raise ValueError(f"pagerank: iterations must be >= 1, got {iterations}")
     e = (
         edges.select(
             F.col(src).cast("long").alias("_src"),
@@ -600,19 +630,14 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    out_deg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg"))
+    # the node frame carries every per-node attribute a round needs:
+    # _deg (out-degree, null for a dangling node) and _is_seed; one
+    # aggregate over both edge ends yields every node and its out-degree
     nodes = (
-        e.select(F.col("_src").alias("node"))
-        .union(e.select(F.col("_dst").alias("node")))
-        .distinct()
-        .join(
-            out_deg.select(
-                F.col("_src").alias("node"), F.lit(True).alias("_has_out")
-            ),
-            "node",
-            "left",
-        )
-        .select("node", F.coalesce("_has_out", F.lit(False)).alias("_has_out"))
+        e.select(F.col("_src").alias("node"), F.lit(1).alias("_out"))
+        .union(e.select(F.col("_dst").alias("node"), F.lit(0).alias("_out")))
+        .groupBy("node")
+        .agg(F.nullif(F.sum("_out"), F.lit(0)).alias("_deg"))
     )
     if seeds is not None:
         nodes = nodes.join(
@@ -624,7 +649,7 @@ def pagerank(
             "node",
             "left",
         ).select(
-            "node", "_has_out", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed")
+            "node", "_deg", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed")
         )
     else:
         nodes = nodes.withColumn("_is_seed", F.lit(True))
@@ -635,7 +660,9 @@ def pagerank(
         setup,
         F.count(F.lit(1)).alias("n"),
         F.count_if("_is_seed").alias("n_tele"),
-        F.count_if(F.col("_is_seed") & ~F.col("_has_out")).alias("n_dangling_seeds"),
+        F.count_if(F.col("_is_seed") & F.col("_deg").isNull()).alias(
+            "n_dangling_seeds"
+        ),
     ).localCheckpoint(eager=True)
     counts = setup.get
     if counts["n"] == 0:
@@ -644,25 +671,19 @@ def pagerank(
     if n_tele == 0:
         raise ValueError("personalized pagerank: no seed appears in the graph")
     # Scale-adaptive static-frame layout (guide §2.4): at cluster scale the
-    # per-round ranks⋈ed join is a sort-merge join, so the STATIC edge frame
-    # is re-shuffled every round; pre-partitioning ed on the join key (_src)
-    # and nodes on node, persisted so the partitioning survives AQE, makes
-    # the static side of every round's join exchange-free. Below the
-    # threshold the frames are broadcast-sized and this is pure overhead
-    # (measured — see _PREPARTITION_MIN_NODES), so the local plan is kept
-    # bit-identical. Rank values are unchanged either way: partitioning
-    # only reorders float summation within the same per-node groups, and
-    # the parity test pins both paths to the dense reference.
-    # Adaptive pin decision: above the node threshold the per-round join
-    # sides are sort-merge and pinning pays; _PREPARTITION_MIN_NODES <= 0
-    # means "adaptive path disabled", and an explicit conf/env setting
-    # (true OR false) always wins — see _pin_static.
-    adaptive = 0 < _PREPARTITION_MIN_NODES <= counts["n"]
-    nodes, _pins_n = _pin_static(nodes, "node", local=None, adaptive=adaptive)
-    ed, _pins_e = _pin_static(
-        e.join(out_deg, "_src"), "_src", local="ckpt", adaptive=adaptive
+    # per-round ranks⋈e join is a sort-merge join, so the STATIC edge frame
+    # is re-shuffled every round; pre-partitioning e on the join key (_src),
+    # persisted so the partitioning survives AQE, makes the static side of
+    # every round's join exchange-free. No node frame is joined per round
+    # (the rank rows carry the node attributes), so only e is pinned.
+    # Below the threshold e is broadcast-sized and this is pure overhead
+    # (measured — see _PREPARTITION_MIN_NODES), so the local plan is kept.
+    # Rank values are unchanged either way: partitioning only reorders
+    # float summation within the same per-node groups, and the parity test
+    # pins both paths to the dense reference.
+    e, _pinned = _pin_static(
+        e, "_src", local=None, adaptive=_adaptive_pin(counts["n"])
     )
-    _pinned = _pins_n + _pins_e
     try:
         tele = F.when(F.col("_is_seed"), F.lit(1.0 / n_tele)).otherwise(F.lit(0.0))
         ranks = nodes.withColumn("rank", tele)
@@ -670,39 +691,51 @@ def pagerank(
         # 1/n_tele, then each round's value is observed on that round's
         # checkpoint and enters the next round as a scalar
         dangling = counts["n_dangling_seeds"] / n_tele
+        # One aggregate per node: the contributions it receives plus its
+        # own rank row (c null), which brings _deg and _is_seed through the
+        # same groupBy instead of a node re-join. The Column expressions
+        # are loop-invariant and built once: building them every round
+        # through py4j was about half of a round's plan-building CPU
+        # (measured on the q84 graph, local[4]: ~77 -> ~37 ms a round).
+        on_src = F.col("node") == F.col("_src")
+        msg = [
+            F.col("_dst").alias("node"),
+            (F.col("rank") / F.col("_deg")).alias("c"),
+            F.lit(None).cast("long").alias("_deg"),
+            F.lit(None).cast("boolean").alias("_is_seed"),
+        ]
+        own = ["node", F.lit(None).cast("double").alias("c"), "_deg", "_is_seed"]
+        attrs = [
+            F.sum("c").alias("in_rank"),
+            F.max("_deg").alias("_deg"),
+            F.max("_is_seed").alias("_is_seed"),
+        ]
+        teleport = F.lit(1.0 - damping) * tele
+        inflow = F.lit(damping) * F.coalesce(F.col("in_rank"), F.lit(0.0))
+        held_mass = F.sum(F.when(F.col("_deg").isNull(), F.col("rank"))).alias("d")
         for _ in range(iterations):
-            contrib = (
-                ranks.join(ed, ranks.node == ed._src)
-                .select(
-                    F.col("_dst").alias("node"),
-                    (F.col("rank") / F.col("_deg")).alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("in_rank"))
-            )
             held = Observation()
             ranks = (
-                nodes.join(contrib, "node", "left")
+                ranks.join(e, on_src)
+                .select(*msg)
+                .unionByName(ranks.select(*own))
+                .groupBy("node")
+                .agg(*attrs)
                 .select(
                     "node",
-                    "_has_out",
+                    "_deg",
                     "_is_seed",
                     (
-                        F.lit(1.0 - damping) * tele
-                        + F.lit(damping) * F.lit(dangling) * tele
-                        + F.lit(damping) * F.coalesce(F.col("in_rank"), F.lit(0.0))
+                        teleport + F.lit(damping) * F.lit(dangling) * tele + inflow
                     ).alias("rank"),
                 )
-                .observe(
-                    held,
-                    F.sum(F.when(~F.col("_has_out"), F.col("rank"))).alias("d"),
-                )
+                .observe(held, held_mass)
                 .localCheckpoint(eager=True)
             )
             dangling = held.get["d"] or 0.0
     finally:
         # every iteration's ranks frame is materialized (checkpointed), so
-        # the result no longer depends on the pinned statics
+        # the result no longer depends on the pinned edge frame
         for _f in _pinned:
             _f.unpersist(False)
     return ranks.select("node", "rank")

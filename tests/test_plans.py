@@ -325,6 +325,64 @@ def test_pagerank_one_checkpoint_job_per_iteration(spark):
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
+def _jobs_per_round_aqe_on(spark, run) -> float:
+    """Jobs per round of ``run(iterations)`` with AQE on, as the job-count
+    delta between 7- and 2-iteration runs divided by 5 (setup cancels)."""
+    import time
+
+    sc = spark.sparkContext
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+
+        def jobs_for(iters: int) -> int:
+            tag = f"round-jobs-{run.__name__}-{iters}"
+            sc.setJobGroup(tag, tag)
+            run(iters)
+            sc.setJobGroup("round-jobs-other", "x")
+            time.sleep(0.3)
+            return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+        return (jobs_for(7) - jobs_for(2)) / 5
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def _q84_edges(spark):
+    from graphsense_blocksci_spark.queries import _supplier_chain_edges
+    from graphsense_blocksci_spark.sources.tables import load_table
+
+    return _supplier_chain_edges(load_table(spark, SF, "lineitem")).localCheckpoint()
+
+
+def test_pagerank_round_is_one_join_one_aggregate_under_aqe(spark):
+    """With AQE on, a PageRank round on the q84 graph is at most 3 jobs:
+    the broadcast of one ranks⋈edges side, the contribution shuffle and
+    the eager checkpoint. The node attributes ride on the rank rows, so
+    no node frame is re-joined (and re-broadcast) per round."""
+    from graphsense_blocksci_spark.operators.graph import pagerank
+
+    edges = _q84_edges(spark)
+
+    def pr(iters):
+        pagerank(edges, iterations=iters).collect()
+
+    assert _jobs_per_round_aqe_on(spark, pr) <= 3
+
+
+def test_label_propagation_round_is_one_aggregate_under_aqe(spark):
+    """With AQE on, a label-propagation round on the q84 graph is at most
+    3 jobs: one join and one ``mode`` aggregate per round."""
+    from graphsense_blocksci_spark.operators.graph import label_propagation
+
+    edges = _q84_edges(spark)
+
+    def lpa(iters):
+        label_propagation(edges, iterations=iters).collect()
+
+    assert _jobs_per_round_aqe_on(spark, lpa) <= 3
+
+
 def test_triangle_count_plan_is_checkpoint_bounded(spark):
     """The oriented edge frame feeds three consumers (both wedge sides
     and the closing join); the lazy localCheckpoint plus the map-side

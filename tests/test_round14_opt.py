@@ -106,3 +106,39 @@ def test_hits_zero_iterations_rejected_under_cluster_profile(spark, monkeypatch)
     with pytest.raises(ValueError, match="iterations must be >= 1"):
         graph.hits(_toy_edges(spark), iterations=0)
     assert _cached_entries(spark) == before
+
+
+def test_pagerank_zero_iterations_rejected_under_cluster_profile(spark, monkeypatch):
+    """pagerank validates iterations at entry: under the cluster profile
+    nothing is checkpointed or pinned before the ValueError."""
+    import pytest
+
+    monkeypatch.setenv("SPARK_GRAFT_PREPARTITION_STATIC", "1")
+    before = _cached_entries(spark)
+    with pytest.raises(ValueError, match="iterations must be >= 1"):
+        graph.pagerank(_toy_edges(spark), iterations=0)
+    assert _cached_entries(spark) == before
+
+
+def test_label_propagation_zero_iterations_rejected(spark):
+    import pytest
+
+    with pytest.raises(ValueError, match="iterations must be >= 1"):
+        graph.label_propagation(_toy_edges(spark), iterations=0)
+
+
+def test_min_nodes_non_positive_warns_once(monkeypatch):
+    """SPARK_GRAFT_PREPARTITION_MIN_NODES <= 0 once meant 'pin every
+    graph'; it now disables the adaptive pin, so it warns once per
+    process and names the force-on spelling."""
+    import warnings
+
+    import pytest
+
+    monkeypatch.setattr(graph, "_PREPARTITION_MIN_NODES", 0)
+    monkeypatch.setattr(graph, "_MIN_NODES_WARNED", False)
+    with pytest.warns(UserWarning, match="prepartitionStatic=true"):
+        assert graph._adaptive_pin(10**9) is False
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert graph._adaptive_pin(10**9) is False

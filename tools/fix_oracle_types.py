@@ -11,8 +11,11 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-PATH = "/root/repo/graphsense_blocksci_spark/queries.py"
+PATH = str(
+    Path(__file__).resolve().parents[1] / "graphsense_blocksci_spark" / "queries.py"
+)
 
 # (query, column, duckdb cast target) — from tools/oracle_types.py audit.
 FIXES: list[tuple[str, str, str]] = [
