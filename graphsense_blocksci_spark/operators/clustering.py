@@ -161,6 +161,10 @@ def kmeans_lloyd(
     bit-exact; verified by numpy parity pytest (tests/test_clustering)
     and a rows-only driver check, like PageRank.
     """
+    if k < 1 or n_iter < 0:
+        raise ValueError(
+            f"kmeans_lloyd: need k >= 1 and n_iter >= 0, got k={k}, n_iter={n_iter}"
+        )
     if dim is None:
         row = vectors.select(F.size(F.col(vec_col)).alias("d")).first()
         if row is None:

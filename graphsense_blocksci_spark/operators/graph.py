@@ -42,46 +42,36 @@ Scale notes:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import warnings
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-# Below this node count the per-round join sides are broadcast-sized and
-# pre-partitioning the static frames is pure overhead (measured: q84-shaped
-# sf0.01 graph, cache-partitioned statics 9.2 s vs 5.6 s shipped, because
-# AQE already broadcasts the edge frame locally). Above it the joins are
-# sort-merge and the static edge frame would otherwise be RE-SHUFFLED EVERY
-# ROUND — pre-partitioning on the join key and persisting (cached plans
-# keep their partitioning under AQE; localCheckpoint does not) removes that
-# per-round exchange outright (guide §2.4). Env-overridable so clusters can
-# tune the crossover without touching code; <= 0 disables the adaptive
-# path entirely (an explicit spark.graphsense.prepartitionStatic true or
-# false overrides the adaptive decision in both directions).
-_PREPARTITION_MIN_NODES = int(
-    os.environ.get("SPARK_GRAFT_PREPARTITION_MIN_NODES", "2000000")
-)
-_MIN_NODES_WARNED = False
+# pagerank pins its edge frame when the node count reaches this and the
+# profile switch is unset. Below it the per-round join sides are
+# broadcast-sized and pre-partitioning the static frames is pure overhead
+# (measured: q84-shaped sf0.01 graph, cache-partitioned statics 9.2 s vs
+# 5.6 s shipped, because AQE already broadcasts the edge frame locally).
+# Above it the joins are sort-merge and the static edge frame would
+# otherwise be RE-SHUFFLED EVERY ROUND — pre-partitioning on the join key
+# and persisting (cached plans keep their partitioning under AQE;
+# localCheckpoint does not) removes that per-round exchange outright
+# (guide §2.4). An explicit spark.graphsense.prepartitionStatic true or
+# false overrides this threshold in both directions.
+_PREPARTITION_MIN_NODES = 2_000_000
 
-
-def _adaptive_pin(n_nodes: int) -> bool:
-    """The node-count pin decision `_pin_static` uses when the profile
-    switch is unset. ``<= 0`` used to mean "pin every graph" and now
-    means "never pin adaptively", so that setting warns once per process
-    and names the force-on spelling."""
-    global _MIN_NODES_WARNED
-    if _PREPARTITION_MIN_NODES > 0:
-        return n_nodes >= _PREPARTITION_MIN_NODES
-    if not _MIN_NODES_WARNED:
-        _MIN_NODES_WARNED = True
-        warnings.warn(
-            f"SPARK_GRAFT_PREPARTITION_MIN_NODES={_PREPARTITION_MIN_NODES}"
-            " now disables the adaptive pin; set"
-            " spark.graphsense.prepartitionStatic=true to force pinning",
-            stacklevel=3,
-        )
-    return False
+# The switch used to have env spellings; they are no longer read, so a
+# process that still sets one is told once where the switch moved.
+_RETIRED_ENV = ("SPARK_GRAFT_PREPARTITION_STATIC", "SPARK_GRAFT_PREPARTITION_MIN_NODES")
+if any(v in os.environ for v in _RETIRED_ENV):
+    warnings.warn(
+        f"{' and '.join(_RETIRED_ENV)} are no longer read; set the session"
+        " conf spark.graphsense.prepartitionStatic (true, false or unset)",
+        UserWarning,
+    )
 
 
 def _shuffle_width(df: DataFrame) -> int:
@@ -93,72 +83,63 @@ def _shuffle_width(df: DataFrame) -> int:
         return df.sparkSession.sparkContext.defaultParallelism
 
 
-def _prepartition_tristate(df: DataFrame) -> bool | None:
-    """Cluster-profile switch for `_pin_static`, three-valued: session
-    conf ``spark.graphsense.prepartitionStatic`` (shipped in
-    ``session.cluster_conf()``) or env ``SPARK_GRAFT_PREPARTITION_STATIC``.
-    Returns True for an explicit on, False for an explicit off (a hard
-    veto — adaptive thresholds may not override it), None when unset.
-    Local default unset→off: at bench scale the loop-static frames are
-    broadcast-sized, so pre-partitioning them is pure overhead (measured
-    on the q84 graph: 9.2 s vs 5.6 s) — the local plans stay exactly the
-    shipped ones."""
-    try:
-        v = df.sparkSession.conf.get(
-            "spark.graphsense.prepartitionStatic",
-            os.environ.get("SPARK_GRAFT_PREPARTITION_STATIC", ""),
-        )
-    except Exception:
-        v = ""
-    v = str(v).strip().lower()
-    if v in ("1", "true", "yes", "on"):
-        return True
-    if v in ("0", "false", "no", "off"):
-        return False
-    return None
-
-
-def _prepartition_static_enabled(df: DataFrame) -> bool:
-    return _prepartition_tristate(df) is True
-
-
-def _pin_static(
+@contextlib.contextmanager
+def _pinned(
     df: DataFrame,
     key: str,
     local: str | None = "ckpt",
-    adaptive: bool | None = None,
-) -> tuple[DataFrame, list[DataFrame]]:
+    adaptive: bool = False,
+) -> Iterator[DataFrame]:
     """Materialize a frame that an iterative loop equi-joins on ``key``
-    EVERY round (guide §2.4 — remove shuffles outright).
+    EVERY round (guide §2.4 — remove shuffles outright), for the span of
+    a ``with`` block.
 
-    Cluster profile (`_prepartition_tristate`): repartition on the
+    Cluster profile (session conf ``spark.graphsense.prepartitionStatic``
+    true, shipped in ``session.cluster_conf()``): repartition on the
     join key once and persist. Cached plans keep their partitioning
     under AQE (localCheckpoint does not — pinned in
-    tests/test_round13_opt.py), so every round's sort-merge join reads
+    tests/test_graph_pinning.py), so every round's sort-merge join reads
     the static side exchange-free: the frame is shuffled ONCE at setup
-    instead of once per round. Callers must ``unpersist`` the returned
-    pins once the loop's result is materialized.
+    instead of once per round. The pin is released when the block
+    exits, also when it raises or the materializing ``count`` fails, so
+    the block must materialize whatever it returns that reads the pin.
 
     ``adaptive``: a caller-computed pin decision (e.g. pagerank's
-    node-count threshold) used only when the profile switch is UNSET —
-    an explicit conf/env true or false always wins, so setting
-    ``spark.graphsense.prepartitionStatic=false`` hard-disables pinning
-    everywhere.
+    node-count threshold) used only when the switch is UNSET — an
+    explicit true or false always wins, so ``false`` is a hard veto on
+    pinning everywhere.
 
-    Local default: ``local='ckpt'`` reproduces the shipped eager
-    localCheckpoint; ``local=None`` leaves the frame as-is (for loops
+    Local default (switch unset, no adaptive pin): at bench scale the
+    loop-static frames are broadcast-sized, so pre-partitioning them is
+    pure overhead (measured on the q84 graph: 9.2 s vs 5.6 s) and the
+    shipped plans are kept. ``local='ckpt'`` yields the eager
+    localCheckpoint; ``local=None`` yields the frame as-is (for loops
     that deliberately never materialized it). Results are unchanged
     either way — partitioning only moves rows between tasks.
     """
-    ts = _prepartition_tristate(df)
-    pin = ts if ts is not None else bool(adaptive)
-    if pin:
-        out = df.repartition(_shuffle_width(df), key).persist()
+    switch = df.sparkSession.conf.get("spark.graphsense.prepartitionStatic", "")
+    switch = str(switch).strip().lower()
+    pin = adaptive
+    if switch in ("1", "true", "yes", "on"):
+        pin = True
+    elif switch in ("0", "false", "no", "off"):
+        pin = False
+    if not pin:
+        yield df.localCheckpoint(eager=True) if local == "ckpt" else df
+        return
+    out = df.repartition(_shuffle_width(df), key).persist()
+    try:
         out.count()
-        return out, [out]
-    if local == "ckpt":
-        return df.localCheckpoint(eager=True), []
-    return df, []
+        yield out
+    finally:
+        out.unpersist(False)
+
+
+def _uv_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The ``(u, v)`` LONG edge list with null ends dropped."""
+    return edges.select(
+        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+    ).filter(F.col("u").isNotNull() & F.col("v").isNotNull())
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -253,14 +234,7 @@ def connected_components(
     ``max_iterations`` (provably O(log n) — 25 covers any realistic
     graph; 2^25 nodes would converge far earlier).
     """
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        )
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    e = _uv_edges(edges, src, dst).filter(F.col("u") != F.col("v")).distinct()
     if max_driver_edges:
         probe = e.limit(max_driver_edges + 1).collect()
         if len(probe) <= max_driver_edges:
@@ -337,6 +311,56 @@ def incremental_components(
     return merged.unionByName(singles)
 
 
+def _directed_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The distinct ``(_src, _dst)`` LONG edge list the directed
+    operators iterate over."""
+    return edges.select(
+        F.col(src).cast("long").alias("_src"), F.col(dst).cast("long").alias("_dst")
+    ).distinct()
+
+
+def _bfs_levels(
+    e: DataFrame,
+    level0: DataFrame,
+    max_hops: int,
+    expand: Callable[[DataFrame], DataFrame],
+    keys: list[str],
+    level_col: str,
+    local: str | None,
+) -> DataFrame:
+    """The level loop of the BFS family (`bfs_reachability`,
+    `multi_source_bfs`, `bfs_path_counts`). ``e`` is the ``(_src, _dst,
+    ...)`` edge frame, pinned on ``_src`` for the loop; ``level0`` is the
+    seed level with the result's columns. Per level h: ``expand`` maps
+    the frontier⋈e rows (the frontier's ``node`` matched to ``_src``) to
+    the next level keyed by ``keys``; rows already visited are
+    anti-joined away, ``level_col`` is set to h, and the level is
+    checkpointed. The loop stops at ``max_hops`` or at the first empty
+    level. Returns the LAZY union of the checkpointed levels — each
+    level's rows are materialized exactly once and the lineage depth
+    stays bounded by ``max_hops``.
+    """
+    if max_hops < 0:
+        raise ValueError(f"max_hops must be >= 0, got {max_hops}")
+    cols = level0.columns
+    with _pinned(e, "_src", local=local) as e:
+        visited = level0.localCheckpoint(eager=True)
+        frontier = visited
+        for h in range(1, max_hops + 1):
+            nxt = (
+                expand(frontier.join(e, frontier.node == e._src))
+                .join(visited.select(*keys), keys, "left_anti")
+                .withColumn(level_col, F.lit(h).cast("long"))
+                .select(*cols)
+                .localCheckpoint(eager=True)
+            )
+            if nxt.isEmpty():
+                break
+            visited = visited.union(nxt)
+            frontier = nxt
+    return visited
+
+
 def bfs_reachability(
     edges: DataFrame,
     seeds: DataFrame,
@@ -371,35 +395,20 @@ def bfs_reachability(
     the level-h subtree is referenced three times by level h+1 and AQE
     does not reuse its exchanges across the union branches.)
     """
-    e = edges.select(
-        F.col(src).cast("long").alias("_src"), F.col(dst).cast("long").alias("_dst")
-    ).distinct()
-    e, _pins = _pin_static(e, "_src", local=None)
-    try:
-        visited = (
-            seeds.select(F.col(id_col).cast("long").alias("node"))
-            .distinct()
-            .withColumn("hops", F.lit(0).cast("long"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = visited
-        for h in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(e, frontier.node == e._src)
-                .select(F.col("_dst").alias("node"))
-                .distinct()
-                .join(visited.select("node"), "node", "left_anti")
-                .withColumn("hops", F.lit(h).cast("long"))
-            )
-            nxt = nxt.localCheckpoint(eager=True)
-            if nxt.isEmpty():
-                break
-            visited = visited.union(nxt)
-            frontier = nxt
-    finally:
-        for _f in _pins:
-            _f.unpersist(False)
-    return visited
+    seeds0 = (
+        seeds.select(F.col(id_col).cast("long").alias("node"))
+        .distinct()
+        .withColumn("hops", F.lit(0).cast("long"))
+    )
+    return _bfs_levels(
+        _directed_edges(edges, src, dst),
+        seeds0,
+        max_hops,
+        lambda j: j.select(F.col("_dst").alias("node")).distinct(),
+        ["node"],
+        "hops",
+        local=None,
+    )
 
 
 def label_propagation(
@@ -444,17 +453,8 @@ def label_propagation(
         raise ValueError(
             f"label_propagation: iterations must be >= 1, got {iterations}"
         )
-    sym = (
-        edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        )
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-    )
+    sym = _uv_edges(edges, src, dst).filter(F.col("u") != F.col("v"))
     sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    # per-round join key is the neighbor id v (labels ⋈ sym on v)
-    sym, _pins = _pin_static(sym, "v")
-
     # loop-invariant Column expressions, built once (py4j calls per round)
     on_v = F.col("v") == F.col("node")
     out = [F.col("u").alias("node"), "label"]
@@ -468,14 +468,12 @@ def label_propagation(
             .localCheckpoint(eager=True)
         )
 
-    try:
+    # per-round join key is the neighbor id v (labels ⋈ sym on v)
+    with _pinned(sym, "v") as sym:
         # round 1 needs no join: every neighbor's label is still its id
         labels = pick(sym, "v")
         for _ in range(iterations - 1):
             labels = pick(sym.join(labels, on_v), "label")
-    finally:
-        for _f in _pins:
-            _f.unpersist(False)
     return labels
 
 
@@ -576,14 +574,15 @@ def pagerank(
     rows themselves. Rank rows carry the node attributes — ``_deg``
     (null for a dangling node) and ``_is_seed`` — so the aggregate
     rebuilds a whole rank row (sum of contributions, max of each
-    attribute) and no node frame is joined per round. Above
-    ``_PREPARTITION_MIN_NODES`` the static edge frame is repartitioned
-    on ``_src`` ONCE and persisted (cached plans keep their
-    partitioning under AQE), so the static side of every round's join
-    is exchange-free — the edge frame is shuffled once at setup instead
-    of once per round; below it the frame is broadcast-sized and stays
-    a plain checkpoint (measured: pre-partitioning is pure overhead
-    there).
+    attribute) and no node frame is joined per round. From
+    ``_PREPARTITION_MIN_NODES`` nodes on (a constant; an explicit
+    ``spark.graphsense.prepartitionStatic`` true or false overrides it)
+    the static edge frame is repartitioned on ``_src`` ONCE and
+    persisted (cached plans keep their partitioning under AQE), so the
+    static side of every round's join is exchange-free — the edge frame
+    is shuffled once at setup instead of once per round; below it the
+    frame is broadcast-sized and stays a plain checkpoint (measured:
+    pre-partitioning is pure overhead there).
 
     The dangling-mass correction costs no job of its own: each round's
     eager localCheckpoint observes (``Dataset.observe``) the mass held
@@ -622,14 +621,7 @@ def pagerank(
     """
     if iterations < 1:
         raise ValueError(f"pagerank: iterations must be >= 1, got {iterations}")
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("_src"),
-            F.col(dst).cast("long").alias("_dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _directed_edges(edges, src, dst).localCheckpoint(eager=True)
     # the node frame carries every per-node attribute a round needs:
     # _deg (out-degree, null for a dangling node) and _is_seed; one
     # aggregate over both edge ends yields every node and its out-degree
@@ -677,14 +669,16 @@ def pagerank(
     # every round's join exchange-free. No node frame is joined per round
     # (the rank rows carry the node attributes), so only e is pinned.
     # Below the threshold e is broadcast-sized and this is pure overhead
-    # (measured — see _PREPARTITION_MIN_NODES), so the local plan is kept.
-    # Rank values are unchanged either way: partitioning only reorders
-    # float summation within the same per-node groups, and the parity test
-    # pins both paths to the dense reference.
-    e, _pinned = _pin_static(
-        e, "_src", local=None, adaptive=_adaptive_pin(counts["n"])
-    )
-    try:
+    # (measured — see _PREPARTITION_MIN_NODES), so the local plan is kept;
+    # an explicit spark.graphsense.prepartitionStatic overrides the
+    # threshold either way. Rank values are unchanged either way:
+    # partitioning only reorders float summation within the same per-node
+    # groups, and the parity test pins both paths to the dense reference.
+    # Every round's ranks frame is checkpointed, so the result no longer
+    # reads the pinned edge frame once the block exits.
+    with _pinned(
+        e, "_src", local=None, adaptive=counts["n"] >= _PREPARTITION_MIN_NODES
+    ) as e:
         tele = F.when(F.col("_is_seed"), F.lit(1.0 / n_tele)).otherwise(F.lit(0.0))
         ranks = nodes.withColumn("rank", tele)
         # dangling mass of the current ranks: every seed starts at
@@ -733,11 +727,6 @@ def pagerank(
                 .localCheckpoint(eager=True)
             )
             dangling = held.get["d"] or 0.0
-    finally:
-        # every iteration's ranks frame is materialized (checkpointed), so
-        # the result no longer depends on the pinned edge frame
-        for _f in _pinned:
-            _f.unpersist(False)
     return ranks.select("node", "rank")
 
 
@@ -786,7 +775,6 @@ def shortest_paths(
         .groupBy("_src", "_dst")
         .agg(F.min("_w").alias("_w"))  # parallel edges: keep the cheapest
     )
-    e, _pins = _pin_static(e, "_src")
 
     def _relax(frontier: DataFrame) -> DataFrame:
         return (
@@ -809,7 +797,7 @@ def shortest_paths(
     def _merge(cur: DataFrame, imp: DataFrame) -> DataFrame:
         return cur.join(imp.select("node"), "node", "left_anti").union(imp)
 
-    try:
+    with _pinned(e, "_src") as e:
         dist = (
             seeds.select(F.col(id_col).cast("long").alias("node"))
             .distinct()
@@ -825,9 +813,6 @@ def shortest_paths(
                 break
             dist = _merge(dist, improved).localCheckpoint(eager=True)
             frontier = improved
-    finally:
-        for _f in _pins:
-            _f.unpersist(False)
     return dist
 
 
@@ -900,7 +885,6 @@ def random_walks(
     src: str = "src",
     dst: str = "dst",
     id_col: str = "node",
-    node_space: int = 8192,
 ) -> DataFrame:
     """Deterministic hash-driven random walks — the DeepWalk/node2vec
     corpus generator, with the same rand()-is-wrong-at-scale fix as
@@ -917,15 +901,17 @@ def random_walks(
     Scale shape per step: ONE equi-join of the walk frame (|seeds| ×
     n_walks rows, constant) against the edge table on the current
     node + one min aggregate per walk — the hash tie-break rides the
-    aggregate as ``h * node_space + dst`` (order-preserving because
-    dst < node_space), so no window, no per-walk sort. localCheckpoint
-    per step keeps lineage flat. Walk storage is a STRING per walk,
-    never an exploded row per visited node.
+    aggregate as ``min(struct(h, dst))`` (smallest hash, then smallest
+    node id), so no window, no per-walk sort. localCheckpoint per step
+    keeps lineage flat. Walk storage is a STRING per walk, never an
+    exploded row per visited node.
     """
-    e = edges.select(
-        F.col(src).cast("long").alias("_src"), F.col(dst).cast("long").alias("_dst")
-    ).distinct()
-    e, _pins = _pin_static(e, "_src")
+    if walk_length < 1 or n_walks < 1:
+        raise ValueError(
+            "random_walks: walk_length and n_walks must be >= 1, got"
+            f" {walk_length} and {n_walks}"
+        )
+    e = _directed_edges(edges, src, dst)
     walks = (
         seeds.select(F.col(id_col).cast("long").alias("seed"))
         .distinct()
@@ -943,53 +929,43 @@ def random_walks(
             F.col("seed").cast("string").alias("path"),
         )
     )
-    try:
+    picked = F.col("_pick._dst")
+    with _pinned(e, "_src") as e:
         for step in range(1, walk_length + 1):
-            hk = (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                F.col("walk_id").cast("string"),
-                                F.lit(step).cast("string"),
-                                F.col("_dst").cast("string"),
-                            )
-                        ),
-                        1,
-                        7,
+            h = F.conv(
+                F.substring(
+                    F.md5(
+                        F.concat_ws(
+                            "|",
+                            F.col("walk_id").cast("string"),
+                            F.lit(step).cast("string"),
+                            F.col("_dst").cast("string"),
+                        )
                     ),
-                    16,
-                    10,
-                ).cast("long")
-                * node_space
-                + F.col("_dst")
-            )
+                    1,
+                    7,
+                ),
+                16,
+                10,
+            ).cast("long")
+            # a walk at a sink matches no edge: _dst is null and so is
+            # the pick, which leaves cur null and the path as it was
+            pick = F.when(F.col("_dst").isNotNull(), F.struct(h, "_dst"))
             walks = (
                 walks.join(e, walks.cur == e._src, "left")
                 .groupBy("seed", "walk_id")
-                .agg(
-                    F.first("path").alias("_path"),
-                    F.min(hk).alias("_hk"),
-                )
+                .agg(F.first("path").alias("_path"), F.min(pick).alias("_pick"))
                 .select(
                     "seed",
                     "walk_id",
-                    (F.col("_hk") % node_space).alias("cur"),
+                    picked.alias("cur"),
                     F.when(
-                        F.col("_hk").isNotNull(),
-                        F.concat_ws(
-                            ",",
-                            F.col("_path"),
-                            (F.col("_hk") % node_space).cast("string"),
-                        ),
+                        picked.isNotNull(),
+                        F.concat_ws(",", F.col("_path"), picked.cast("string")),
                     ).otherwise(F.col("_path")).alias("path"),
                 )
                 .localCheckpoint(eager=True)
             )
-    finally:
-        for _f in _pins:
-            _f.unpersist(False)
     return walks.select("seed", "walk_id", "path")
 
 
@@ -1020,40 +996,21 @@ def multi_source_bfs(
     checkpoint per hop bought nothing; the two-level unroll variant
     was A/B-measured slower and rejected).
     """
-    e = edges.select(
-        F.col(src).cast("long").alias("_src"), F.col(dst).cast("long").alias("_dst")
-    ).distinct()
-    e, _pins = _pin_static(e, "_src", local=None)
-    try:
-        visited = (
-            seeds.select(F.col(id_col).cast("long").alias("source"))
-            .distinct()
-            .select("source", F.col("source").alias("node"))
-            .withColumn("hops", F.lit(0).cast("long"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = visited
-        for h in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(e, frontier.node == e._src)
-                .select("source", F.col("_dst").alias("node"))
-                .distinct()
-                .join(
-                    visited.select("source", "node"),
-                    ["source", "node"],
-                    "left_anti",
-                )
-                .withColumn("hops", F.lit(h).cast("long"))
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.union(nxt)
-            frontier = nxt
-    finally:
-        for _f in _pins:
-            _f.unpersist(False)
-    return visited
+    seeds0 = (
+        seeds.select(F.col(id_col).cast("long").alias("source"))
+        .distinct()
+        .select("source", F.col("source").alias("node"))
+        .withColumn("hops", F.lit(0).cast("long"))
+    )
+    return _bfs_levels(
+        _directed_edges(edges, src, dst),
+        seeds0,
+        max_hops,
+        lambda j: j.select("source", F.col("_dst").alias("node")).distinct(),
+        ["source", "node"],
+        "hops",
+        local=None,
+    )
 
 
 def modularity(
@@ -1452,46 +1409,27 @@ def bfs_path_counts(
 
     Returns (source, node, dist, sigma) including (s, s, 0, 1).
     """
-    e = edges.select(
-        F.col(src).cast("long").alias("_src"),
-        F.col(dst).cast("long").alias("_dst"),
-    ).distinct()
-    e, _pins = _pin_static(e, "_src")
-    try:
-        visited = (
-            seeds.select(F.col(id_col).cast("long").alias("source"))
-            .distinct()
-            .select(
-                "source",
-                F.col("source").alias("node"),
-                F.lit(0).cast("long").alias("dist"),
-                F.lit(1).cast("long").alias("sigma"),
-            )
-            .localCheckpoint(eager=True)
+    seeds0 = (
+        seeds.select(F.col(id_col).cast("long").alias("source"))
+        .distinct()
+        .select(
+            "source",
+            F.col("source").alias("node"),
+            F.lit(0).cast("long").alias("dist"),
+            F.lit(1).cast("long").alias("sigma"),
         )
-        frontier = visited
-        for h in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(e, frontier.node == e._src)
-                .groupBy("source", F.col("_dst").alias("node"))
-                .agg(F.sum("sigma").cast("long").alias("sigma"))
-                .join(
-                    visited.select("source", "node"),
-                    ["source", "node"],
-                    "left_anti",
-                )
-                .withColumn("dist", F.lit(h).cast("long"))
-                .select("source", "node", "dist", "sigma")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.union(nxt)
-            frontier = nxt
-    finally:
-        for _f in _pins:
-            _f.unpersist(False)
-    return visited
+    )
+    return _bfs_levels(
+        _directed_edges(edges, src, dst),
+        seeds0,
+        max_hops,
+        lambda j: j.groupBy("source", F.col("_dst").alias("node")).agg(
+            F.sum("sigma").cast("long").alias("sigma")
+        ),
+        ["source", "node"],
+        "dist",
+        local="ckpt",
+    )
 
 
 def betweenness_sampled(
@@ -1524,13 +1462,9 @@ def betweenness_sampled(
     Returns (node, betweenness, n_sources).
     """
     paths = bfs_path_counts(edges, seeds, max_hops, src, dst, id_col)
-    e = edges.select(
-        F.col(src).cast("long").alias("_src"),
-        F.col(dst).cast("long").alias("_dst"),
-    ).distinct()
+    e = _directed_edges(edges, src, dst)
     # the backward pass joins on the edge HEAD (w == _dst) every level
-    e, _pins = _pin_static(e, "_dst")
-    try:
+    with _pinned(e, "_dst") as e:
         deepest = paths.agg(F.max("dist")).first()[0] or 0
         # delta starts 0 everywhere; accumulate level by level, deep first
         delta = paths.select(
@@ -1585,9 +1519,6 @@ def betweenness_sampled(
         n_sources = seeds.select(
             F.col(id_col).cast("long").alias("s")
         ).distinct().count()
-    finally:
-        for _f in _pins:
-            _f.unpersist(False)
     return (
         delta.filter(F.col("node") != F.col("source"))
         .groupBy("node")
@@ -1631,10 +1562,7 @@ def betweenness_pair_counting(
     """
     paths = bfs_path_counts(edges, seeds, max_hops, src, dst, id_col)
     sp = paths.localCheckpoint(eager=True)
-    e = edges.select(
-        F.col(src).cast("long").alias("_src"),
-        F.col(dst).cast("long").alias("_dst"),
-    ).distinct()
+    e = _directed_edges(edges, src, dst)
     a, b = sp.alias("a"), sp.alias("b")
     dag = (
         a.join(e, F.col("a.node") == F.col("_src"))
@@ -1890,15 +1818,7 @@ def hits(
             "hits: iterations > 16 would overflow the exact-int64"
             f" contract, got {iterations}"
         )
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("u"),
-            F.col(dst).cast("long").alias("v"),
-        )
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _uv_edges(edges, src, dst).distinct().localCheckpoint(eager=False)
     # r14 (guide §2.4): the a-step joins the static edge frame on u and
     # the h-step on v EVERY iteration — under the cluster profile pin
     # one copy per join key so neither half-round re-exchanges the edge
@@ -1906,10 +1826,7 @@ def hits(
     # final a/h are eagerly materialized before the pins are released
     # (the materialize-and-release contract); the local plans stay
     # exactly the shipped lazy ones (pins are no-ops there).
-    eu, _pins_u = _pin_static(e, "u", local=None)
-    ev, _pins_v = _pin_static(e, "v", local=None)
-    _pins = _pins_u + _pins_v
-    try:
+    with _pinned(e, "u", local=None) as eu, _pinned(e, "v", local=None) as ev:
         nodes = (
             e.select(F.col("u").alias("node"))
             .union(e.select(F.col("v").alias("node")))
@@ -1917,7 +1834,6 @@ def hits(
             .localCheckpoint(eager=False)
         )
         h = nodes.select("node", F.lit(1).cast("long").alias("hub"))
-        a = None
         for _ in range(iterations):
             a = (
                 eu.join(h.select(F.col("node").alias("u"), "hub"), "u")
@@ -1947,12 +1863,9 @@ def hits(
                 )
                 .localCheckpoint(eager=False)
             )
-        if _pins:
+        if eu is not e:
             a = a.localCheckpoint(eager=True)
             h = h.localCheckpoint(eager=True)
-    finally:
-        for _f in _pins:
-            _f.unpersist(False)
     return nodes.join(a, "node").join(h, "node").select(
         "node", "authority", "hub"
     )
@@ -1989,15 +1902,7 @@ def strongly_connected_components(
     node-keyed shuffle on the label frame; the peel shrinks the
     active graph monotonically, and lineage is cut per step (lazy
     localCheckpoint — the probe materializes it)."""
-    e_all = (
-        edges.select(
-            F.col(src).cast("long").alias("u"),
-            F.col(dst).cast("long").alias("v"),
-        )
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e_all = _uv_edges(edges, src, dst).distinct().localCheckpoint(eager=True)
     nodes = (
         e_all.select(F.col("u").alias("node"))
         .union(e_all.select(F.col("v").alias("node")))
@@ -2064,7 +1969,6 @@ def strongly_connected_components(
         # (same-window A/B: 9.2 s -> 5.1 s for q223 at sf0.1).
         from concurrent.futures import ThreadPoolExecutor
 
-        fwd_edges = active_edges
         rev_edges = active_edges.select(
             F.col("v").alias("u"), F.col("u").alias("v")
         )
@@ -2072,13 +1976,11 @@ def strongly_connected_components(
         # static direction frame on v; pinning both directions
         # partitioned by v makes every step's edge side exchange-free
         # (the propagation runs O(diameter) steps per peel round).
-        _round_pins: list[DataFrame] = []
-        if _prepartition_static_enabled(active_edges):
-            width = _shuffle_width(active_edges)
-            fwd_edges = fwd_edges.repartition(width, "v").persist()
-            rev_edges = rev_edges.repartition(width, "v").persist()
-            _round_pins = [fwd_edges, rev_edges]
-        try:
+        # labeled and the next round's frames are materialized inside
+        # the block, so this round's direction pins can go at its end.
+        with _pinned(active_edges, "v", local=None) as fwd_edges, _pinned(
+            rev_edges, "v", local=None
+        ) as rev_edges:
             with ThreadPoolExecutor(max_workers=2) as pool:
                 f_fut = pool.submit(_minreach, fwd_edges)
                 b_fut = pool.submit(_minreach, rev_edges)
@@ -2104,11 +2006,6 @@ def strongly_connected_components(
                 .join(done.select(F.col("node").alias("v")), "v", "left_anti")
                 .localCheckpoint(eager=True)
             )
-        finally:
-            # labeled and the next round's frames are materialized above
-            # (or the round failed) — this round's direction pins can go
-            for _f in _round_pins:
-                _f.unpersist(False)
     else:
         raise RuntimeError(
             f"strongly_connected_components: {max_rounds} peel rounds exceeded"
@@ -2142,11 +2039,7 @@ def ancestor_closure(
     Returns (node, ancestor, dist), all LONG.
     """
     p = (
-        edges.select(
-            F.col(src).cast("long").alias("u"),
-            F.col(dst).cast("long").alias("v"),
-        )
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+        _uv_edges(edges, src, dst)
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .select("u", "v", F.lit(1).cast("long").alias("dist"))

@@ -112,9 +112,11 @@ def cluster_conf(
         # (repartition on its per-round join key + persist) instead of
         # once per round — at cluster scale those joins are sort-merge,
         # so this removes the static side's exchange from every round.
-        # Local bench scale keeps this off: the frames are
+        # This conf key is the only switch: true pins, false never pins,
+        # unset pins only where an operator's own size threshold says so
+        # (pagerank). Local bench scale leaves it unset: the frames are
         # broadcast-sized there and pre-partitioning is measured pure
-        # overhead (operators/graph.py:_pin_static).
+        # overhead (operators/graph.py:_pinned).
         "spark.graphsense.prepartitionStatic": "true",
         **CODEGEN_CONF,
     }

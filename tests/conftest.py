@@ -46,7 +46,7 @@ def fixture_dir(tmp_path_factory) -> str:
 _SLOW_TESTS = {
     "test_oracle_types.py::test_every_oracle_type_matches_spark_schema",  # 366.0s
     "test_streaming.py::test_stateful_sessionize_idle_timeout_flush",  # 244.4s
-    "test_round13_opt.py::test_static_pin_profile_matches_default_across_operators",  # 77.8s
+    "test_graph_pinning.py::test_static_pin_profile_matches_default_across_operators",  # 77.8s
     "test_round6_props.py::test_scc_random_digraphs_vs_tarjan",  # 17.4s
     "test_round12_qd88_degenerate.py::test_qd88_degenerate_rows_match_oracle",  # 17.1s
     "test_streaming.py::test_stream_dedup_within_watermark",  # 15.2s
@@ -64,7 +64,7 @@ _SLOW_TESTS = {
     "test_properties.py::test_jaccard_join_never_misses_a_pair",  # 9.2s
     "test_properties.py::test_asof_join_matches_pandas_merge_asof",  # 8.9s
     "test_llm_ops.py::test_knn_lsh_gemm_matches_fold_variant",  # 8.6s
-    "test_round13_opt.py::test_personalized_pagerank_prepartitioned_path_matches_default",  # 8.2s
+    "test_graph_pinning.py::test_personalized_pagerank_prepartitioned_path_matches_default",  # 8.2s
     "test_round4_ops.py::test_shortest_paths_matches_reference",  # 7.9s
     "test_round6_ops.py::test_index_daemon_batch_replay_idempotent",  # 7.8s
     "test_properties.py::test_exact_dedup_idempotent_and_min_keeper",  # 7.8s
@@ -75,7 +75,7 @@ _SLOW_TESTS = {
     "test_round7_props.py::test_log2_hist_stream_multibatch",  # 7.4s
     "test_round6_ops.py::test_scc_direction_sensitivity",  # 7.3s
     "test_streaming.py::test_stateful_sessionize_across_batches",  # 7.2s
-    "test_round13_opt.py::test_pagerank_prepartitioned_path_matches_default",  # 7.2s
+    "test_graph_pinning.py::test_pagerank_prepartitioned_path_matches_default",  # 7.2s
     "test_properties.py::test_bfs_reachability_random_graphs",  # 7.2s
     "test_round11_wave2.py::test_qd97_equals_batch_reuse_curve",  # 7.1s
     "test_properties.py::test_simhash_pigeonhole_never_misses_a_pair",  # 6.9s

@@ -92,3 +92,16 @@ def test_semdedup_max_cluster_disables_pairing(spark):
     out = semdedup(emb, k=K, threshold=0.0, max_cluster=1)
     # every cluster is larger than 1 -> no pairing anywhere -> all kept
     assert out.filter(~F.col("keep")).count() == 0
+
+
+@pytest.mark.parametrize("k, n_iter", [(0, 3), (3, -1)])
+def test_lloyd_rejects_degenerate_arguments_before_any_job(spark, monkeypatch, k, n_iter):
+    df = spark.createDataFrame([(0, [0.0, 1.0])], "vec_id long, embedding array<double>")
+
+    def no_job(*args, **kwargs):
+        raise AssertionError("a job ran before the argument check")
+
+    for name in ("first", "collect", "count", "localCheckpoint"):
+        monkeypatch.setattr(type(df), name, no_job)
+    with pytest.raises(ValueError, match="k >= 1 and n_iter >= 0"):
+        kmeans_lloyd(df, k=k, n_iter=n_iter)

@@ -392,6 +392,25 @@ def test_random_walks_stop_at_sink(spark):
     assert all(r["path"] == "0,1,2" for r in rows)
 
 
+def test_random_walks_large_node_ids(spark):
+    from graphsense_blocksci_spark.operators.graph import random_walks
+
+    # ids >= 8192 come back as themselves, and the hash tie-break still
+    # picks between two out-neighbors deterministically
+    e = spark.createDataFrame(
+        [(10000, 10001), (10001, 10002), (10001, 2**40), (10002, 10000)],
+        "src long, dst long",
+    )
+    seeds = spark.createDataFrame([(10000,)], "node long")
+    rows = random_walks(e, seeds, walk_length=3, n_walks=4).collect()
+    assert len(rows) == 4
+    edges = {(10000, 10001), (10001, 10002), (10001, 2**40), (10002, 10000)}
+    for r in rows:
+        nodes = [int(x) for x in r["path"].split(",")]
+        assert nodes[:2] == [10000, 10001], r["path"]
+        assert all((a, b) in edges for a, b in zip(nodes, nodes[1:])), r["path"]
+
+
 # ----------------------------------------------------- streaming HDR state
 
 
