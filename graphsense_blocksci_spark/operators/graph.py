@@ -766,6 +766,8 @@ def shortest_paths(
     (an anti-join), so a lazy merge would re-execute the whole merge
     chain every round. The per-round dist checkpoint stays.
     """
+    if max_hops < 0:
+        raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     e = (
         edges.select(
             F.col(src).cast("long").alias("_src"),

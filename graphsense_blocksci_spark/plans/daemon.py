@@ -3,86 +3,78 @@ loop (`while true; do blocksci_export.py --continue --previous-day;
 sleep …; done`) as a driver-side composition of the incremental layer.
 
 Each step is pure incremental batch: read the source directory (the
-chain follower drops parsed block files there), read the sink back,
-compute the delta (reorg lag → previous-day cutoff → high-water mark,
-`plans/incremental.py`), transform, append. Idempotence comes from the
-high-water mark, not from write-side dedup: a crashed step that wrote
-its files re-runs to an empty delta.
+chain follower drops parsed block files there), read the sink's
+high-water mark, resolve the delta's bounds (reorg lag → previous-day
+cutoff → high-water mark, `plans/incremental.py`), transform, append.
+Idempotence comes from the high-water mark, not from write-side dedup:
+a step re-run after a write that committed all of its files finds an
+empty delta. A write that committed only some of its files is not
+covered: the HWM is the max over whatever landed, so the blocks below
+it that did not land are never retried.
 
 This is the BATCH face of the daemon; `streaming/ingest.py` is the
 Structured-Streaming face (checkpoint instead of HWM query). Both reuse
 the same `plans/ingest.py` transforms — one declarative transform, two
 execution modes, which is the Spark-first point.
 
-Scale shape per step: one pruned scan of the source (the HWM predicate
-pushes to parquet row-group stats, so old files are skipped), two
-single-row broadcast aggregates (tip, HWM), zero wide shuffles.
+Scale shape per step: at most three jobs, one scan each, every read
+with a known schema (no schema-inference job) and no join or shuffle.
+- The sink's max `block_id` (skipped on cold start, when the sink path
+  does not exist). It reads the sink's `block_id` column whole.
+- One pass over the source rows above that HWM: the tip and the lowest
+  block before the day cutoff. The HWM is a literal, so it is in the
+  source scan's `PushedFilters`, and files or row groups wholly at or
+  below it are skipped by their footer statistics. A step with nothing
+  to append returns here, before any write job.
+- One append of the transformed delta under literal bounds. The row
+  count is observed on that write (`Dataset.observe`), not counted by a
+  second pass.
 """
 
 from __future__ import annotations
 
 import time
-from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-from graphsense_blocksci_spark.plans.incremental import incremental_delta
+from graphsense_blocksci_spark.operators.progress import observed
+from graphsense_blocksci_spark.plans.incremental import (
+    delta_predicate,
+    high_water_mark,
+)
 from graphsense_blocksci_spark.plans.ingest import block_table
-from graphsense_blocksci_spark.schemas import REORG_SAFETY_LAG
-
-
-def _read_sink(spark: SparkSession, sink_dir: str, like: DataFrame) -> DataFrame:
-    """The sink, or an empty frame of the sink's schema on cold start
-    (first daemon run: nothing ingested yet ⇒ full history, matching
-    blocksci_export.py:497-505).
-
-    ONLY a missing path means cold start — any other read failure
-    (corrupt footer, transient FS error) must surface, because treating
-    it as empty would recompute the full history and append a duplicate
-    of everything next to the existing rows."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        return spark.read.parquet(sink_dir)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], like.schema)
-        raise
+from graphsense_blocksci_spark.schemas import RAW_BLOCKS, REORG_SAFETY_LAG
+from graphsense_blocksci_spark.sources.sinks import hadoop_fs
 
 
 def ingest_daemon_step(
     spark: SparkSession,
     source_dir: str,
     sink_dir: str,
-    transform: Callable[[DataFrame], DataFrame] = block_table,
-    block_col: str = "block_id",
-    ts_col: str = "timestamp",
     as_of_epoch: int | None = None,
     lag: int = REORG_SAFETY_LAG,
 ) -> int:
-    """One `--continue --previous-day` pass: append the transformed
-    delta to the sink; returns the number of rows appended (0 ⇒ the
-    chain has nothing new — the daemon just sleeps)."""
-    source = spark.read.parquet(source_dir)
-    transformed = transform(source)
-    sink = _read_sink(spark, sink_dir, transformed)
-    # the delta is computed on the RAW side (reorg lag and cutoff are
-    # source-tip semantics), then transformed once
-    delta_raw = incremental_delta(
-        source, sink, block_col=block_col, ts_col=ts_col,
-        as_of_epoch=as_of_epoch, lag=lag,
-    )
-    delta = transform(delta_raw)
-    # persist around count+write: without it the count and the write
-    # each re-run the full source scan + HWM aggregation
-    delta.persist()
-    try:
-        n = delta.count()
-        if n:
-            delta.write.mode("append").parquet(sink_dir)
-    finally:
-        delta.unpersist()
-    return n
+    """One `--continue --previous-day` pass: append the `block_table` of
+    the delta to the sink; returns the number of rows appended (0 ⇒ the
+    chain has nothing new — the daemon just sleeps).
+
+    Cold start (first daemon run: nothing ingested yet ⇒ full history,
+    matching blocksci_export.py:497-505) is ONLY a missing sink path.
+    Any other read failure (corrupt footer, transient FS error) surfaces,
+    because treating it as empty would recompute the full history and
+    append a duplicate of everything next to the existing rows."""
+    source = spark.read.schema(RAW_BLOCKS).parquet(source_dir)
+    hwm = None
+    fs, sink_path = hadoop_fs(spark, sink_dir)
+    if fs.exists(sink_path):
+        key = block_table(source).select("block_id").schema
+        hwm = high_water_mark(spark.read.schema(key).parquet(sink_dir))
+    pred = delta_predicate(source, hwm, as_of_epoch=as_of_epoch, lag=lag)
+    if pred is None:
+        return 0
+    delta, obs = observed(block_table(source.filter(pred)), "ingest_daemon_step")
+    delta.write.mode("append").parquet(sink_dir)
+    return obs.get["rows_processed"]
 
 
 def run_ingest_daemon(

@@ -16,10 +16,16 @@ The reference daemon loop (docker/ingest.sh:2-8) runs
 
 Composition order matches the reference: reorg lag bounds the parsed
 tip, previous-day cuts the tail, high-water mark drops what the sink
-already has. All three are single-pass native filters over the source —
-the only data movement is the broadcast of two single-row aggregates
-(sink max, source max), so the plan is a pruned parquet scan at any
-scale.
+already has. `delta_predicate` is the one definition of all three. It
+resolves them driver-side before the delta is read: the HWM is one
+scalar over the sink (`high_water_mark`), the cutoff is a literal UTC
+midnight, and one aggregate over the rows above the HWM returns the tip
+and the lowest block before the cutoff. The delta is then the source
+under a predicate of literals, so the HWM bound reaches the parquet
+scan's `PushedFilters` and no join is planned. Whether the scan skips
+old files or row groups depends on how the source is laid out: a
+directory of per-day files written in block order skips by footer
+min/max; one file holding the whole history is read whole.
 
 Idempotence (the reference gets it from Cassandra primary-key upsert,
 blocksci_export.py:132-142): running the delta twice appends nothing
@@ -29,11 +35,36 @@ property-tested as run-twice == run-once.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import datetime as dt
+import time
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from graphsense_blocksci_spark.operators.windows import high_water_mark_filter
 from graphsense_blocksci_spark.schemas import REORG_SAFETY_LAG
+
+_DAY_S = 86_400
+
+
+def _day_cutoff(as_of_epoch: int | None) -> int:
+    """The `--previous-day` cutoff: UTC midnight at or before
+    `as_of_epoch` (now when None), in epoch seconds. Resolved on the
+    driver, so every filter built from it holds a literal."""
+    now = int(time.time()) if as_of_epoch is None else int(as_of_epoch)
+    return now // _DAY_S * _DAY_S
+
+
+def _before_cutoff(df: DataFrame, ts_col: str, cutoff: int) -> Column:
+    # Native timestamp columns compare against a timestamp literal;
+    # casting them through long would truncate sub-second precision.
+    # Anything else is epoch seconds (the reference's layout), compared
+    # as an int — for an int column the optimizer unwraps the cast, so
+    # the bound stays pushable.
+    if dict(df.dtypes).get(ts_col) in ("timestamp", "timestamp_ntz"):
+        return F.col(ts_col) < F.lit(
+            dt.datetime.fromtimestamp(cutoff, dt.timezone.utc)
+        )
+    return F.col(ts_col).cast("long") < F.lit(cutoff)
 
 
 def previous_day_cutoff(
@@ -42,24 +73,11 @@ def previous_day_cutoff(
     """Drop rows timestamped on or after the current UTC day
     (reference: blocksci_export.py:540-553, `--previous-day`).
 
-    `as_of_epoch` pins "now" for tests; production passes None and the
-    cutoff is evaluated driver-side once (a literal in the plan, so the
-    filter pushes down to the parquet scan).
+    `as_of_epoch` pins "now" for tests; production passes None. Either
+    way the cutoff is a literal in the plan (`_day_cutoff`), so the
+    filter pushes down to the parquet scan.
     """
-    if as_of_epoch is None:
-        cutoff = F.date_trunc("day", F.current_timestamp())
-    else:
-        cutoff = F.date_trunc(
-            "day", F.to_timestamp(F.lit(as_of_epoch).cast("long"))
-        )
-    # Epoch-seconds int columns (the reference's layout) need a decode;
-    # native timestamp columns are compared directly — casting them
-    # through long would truncate sub-second precision.
-    if dict(df.dtypes).get(ts_col) in ("timestamp", "timestamp_ntz"):
-        ts = F.col(ts_col)
-    else:
-        ts = F.to_timestamp(F.col(ts_col).cast("long"))
-    return df.filter(ts < cutoff)
+    return df.filter(_before_cutoff(df, ts_col, _day_cutoff(as_of_epoch)))
 
 
 def reorg_safety_filter(
@@ -75,6 +93,54 @@ def reorg_safety_filter(
     )
 
 
+def _scalars(df: DataFrame, *aggs: Column) -> list:
+    """Evaluate global aggregates over `df` in one job: they are observed
+    (`Dataset.observe`) while a noop sink drains the scan. Under AQE an
+    `agg().first()` is two jobs, a shuffle map stage and the result."""
+    obs = Observation()
+    names = [f"_{i}" for i in range(len(aggs))]
+    watched = df.observe(obs, *[a.alias(n) for a, n in zip(aggs, names)])
+    watched.write.format("noop").mode("overwrite").save()
+    return [obs.get[n] for n in names]
+
+
+def high_water_mark(sink: DataFrame, block_col: str = "block_id"):
+    """The sink's max `block_col` — one job; None for an empty sink,
+    which means "nothing ingested yet" (the reference's cold start from
+    block 0, blocksci_export.py:497-505)."""
+    (hwm,) = _scalars(sink.select(block_col), F.max(block_col))
+    return hwm
+
+
+def delta_predicate(
+    source: DataFrame,
+    hwm,
+    block_col: str = "block_id",
+    ts_col: str = "timestamp",
+    as_of_epoch: int | None = None,
+    lag: int = REORG_SAFETY_LAG,
+) -> Column | None:
+    """The `--continue --previous-day` bounds as one predicate of
+    literals over `source`: `hwm < block <= tip - lag AND ts < cutoff`
+    (no lower bound when `hwm` is None).
+
+    Runs one job: a single pass over the rows above `hwm` returns the
+    tip and the lowest block before the cutoff. Returns None when that
+    predicate selects nothing — no new block, or every new block before
+    the cutoff is within `lag` of the tip — so a caller can skip the
+    delta entirely."""
+    before = _before_cutoff(source, ts_col, _day_cutoff(as_of_epoch))
+    above = F.lit(True) if hwm is None else F.col(block_col) > F.lit(hwm)
+    tip, lowest = _scalars(
+        source.filter(above).select(block_col, ts_col),
+        F.max(block_col),
+        F.min(F.when(before, F.col(block_col))),
+    )
+    if tip is None or lowest is None or lowest > tip - lag:
+        return None
+    return above & (F.col(block_col) <= F.lit(tip - lag)) & before
+
+
 def incremental_delta(
     source: DataFrame,
     sink: DataFrame,
@@ -87,7 +153,11 @@ def incremental_delta(
     rows of `source` that are (a) at least `lag` blocks behind the tip,
     (b) timestamped before today UTC, and (c) above the sink's high-water
     mark. Empty sink ⇒ full (safe) history, matching the reference's
-    cold start."""
-    safe = reorg_safety_filter(source, block_col, lag)
-    closed = previous_day_cutoff(safe, ts_col, as_of_epoch)
-    return high_water_mark_filter(closed, sink, block_col)
+    cold start.
+
+    The bounds are resolved eagerly (`high_water_mark`, then
+    `delta_predicate`: one job each); the returned frame is the source
+    under literal filters."""
+    hwm = high_water_mark(sink, block_col)
+    pred = delta_predicate(source, hwm, block_col, ts_col, as_of_epoch, lag)
+    return source.filter(F.lit(False) if pred is None else pred)

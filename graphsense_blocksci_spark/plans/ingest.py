@@ -11,11 +11,13 @@ Reference mapping (scripts/blocksci_export.py):
 - configuration            <- insert_configuration     (:622-630)
 
 The reference runs these as separate multiprocess passes over the chain;
-here they are projections/aggregations of ONE scanned tx DataFrame, so
-Catalyst shares the scan and each table is a branch of the same DAG.
-All expressions are native columns (whole-stage codegen); the only
-shuffles in the whole ingest are the single groupBy for
-block_transactions and the window for BIP30 dedup.
+here they are projections/aggregations of the same raw DataFrames. Each
+table is its own plan: Catalyst shares nothing across separate writes,
+so every table written re-scans its raw input (the four bulk sink
+writes read the raw txs three times and the raw blocks twice). All
+expressions are native columns (whole-stage codegen); the only shuffles
+in the whole ingest are the single groupBy for block_transactions and
+the window for BIP30 dedup.
 """
 
 from __future__ import annotations
@@ -234,8 +236,9 @@ def ingest_all(
     raw_txs: DataFrame,
     keyspace: str = "btc",
 ) -> dict[str, DataFrame]:
-    """All output tables as branches of one DAG (one pass over the data
-    per materialization; the tx scan is shared by Catalyst)."""
+    """All output tables, each a lazy plan over the raw frames. Every
+    table written is one pass over its raw input; the writes do not
+    share a scan."""
     return {
         "block": block_table(raw_blocks),
         "transaction": transaction_table(raw_txs),

@@ -170,6 +170,13 @@ def overwrite_partitions(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
+def hadoop_fs(spark, path: str):
+    """The Hadoop FileSystem serving `path`, and `path` as a Hadoop Path:
+    the same calls then work on local disk, HDFS, or an object store."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def drop_partition_dirs_ge(
     spark, path: str, partition_col: str, threshold: int
 ) -> list[int]:
@@ -179,15 +186,11 @@ def drop_partition_dirs_ge(
     The partition-level DROP half of a rollback: dynamic partition
     overwrite can only REPLACE partitions present in the written
     frame, so partitions that must end up EMPTY (every row orphaned)
-    need an explicit directory delete. Uses the Hadoop FileSystem API
-    so the same call works on local disk, HDFS, or an object store.
-    Callers must eager-materialize any frame read from these
-    partitions BEFORE deleting (the overwrite-invalidates-readers
-    rule).
+    need an explicit directory delete (through `hadoop_fs`). Callers
+    must eager-materialize any frame read from these partitions BEFORE
+    deleting (the overwrite-invalidates-readers rule).
     """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return []
     dropped: list[int] = []

@@ -459,6 +459,7 @@ def test_label_propagation_zero_iterations_rejected(spark):
         ("multi_source_bfs", "max_hops must be >= 0"),
         ("bfs_path_counts", "max_hops must be >= 0"),
         ("betweenness_sampled", "max_hops must be >= 0"),
+        ("shortest_paths", "max_hops must be >= 0"),
         ("random_walks_length", "walk_length and n_walks must be >= 1"),
         ("random_walks_count", "walk_length and n_walks must be >= 1"),
     ],
@@ -475,6 +476,9 @@ def test_degenerate_arguments_rejected_before_any_job(
         "multi_source_bfs": lambda: graph.multi_source_bfs(edges, seeds, -1),
         "bfs_path_counts": lambda: graph.bfs_path_counts(edges, seeds, -1),
         "betweenness_sampled": lambda: graph.betweenness_sampled(edges, seeds, -1),
+        "shortest_paths": lambda: graph.shortest_paths(
+            edges.withColumn("w", F.lit(1)), seeds, -1
+        ),
         "random_walks_length": lambda: graph.random_walks(edges, seeds, 0),
         "random_walks_count": lambda: graph.random_walks(edges, seeds, 3, n_walks=0),
     }
