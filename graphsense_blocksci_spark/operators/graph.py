@@ -232,8 +232,15 @@ def connected_components(
     The distributed iteration collects only a (count, checksum) pair
     per round; raises if the edge set hasn't stabilized after
     ``max_iterations`` (provably O(log n) — 25 covers any realistic
-    graph; 2^25 nodes would converge far earlier).
+    graph; 2^25 nodes would converge far earlier). ``max_iterations <
+    1`` raises ValueError before any job: the distributed path needs one
+    round to see its fixpoint.
     """
+    if max_iterations < 1:
+        raise ValueError(
+            "connected_components: max_iterations must be >= 1, got"
+            f" {max_iterations}"
+        )
     e = _uv_edges(edges, src, dst).filter(F.col("u") != F.col("v")).distinct()
     if max_driver_edges:
         probe = e.limit(max_driver_edges + 1).collect()
@@ -839,8 +846,11 @@ def kcore(
     nodes — all shuffles on node id, hub fan-in collapsed by map-side
     partial counts. The edge frame only ever shrinks; localCheckpoint
     per round keeps lineage flat, and the loop early-exits once a
-    round peels nothing.
+    round peels nothing. ``rounds = 0`` returns the unpeeled degrees;
+    ``rounds < 0`` raises ValueError before any job.
     """
+    if rounds < 0:
+        raise ValueError(f"kcore: rounds must be >= 0, got {rounds}")
     sym = (
         edges.select(
             F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
@@ -1314,7 +1324,16 @@ def louvain(
     to ~10^6); past that, scale the score to 128-bit decimals.
 
     Reference parity: none — beyond-reference graph surface.
+
+    ``sub_rounds = 0`` keeps every node in its own community;
+    ``sub_rounds < 0`` or ``levels < 1`` (no level, so no labels)
+    raises ValueError before any job.
     """
+    if sub_rounds < 0 or levels < 1:
+        raise ValueError(
+            "louvain: sub_rounds must be >= 0 and levels >= 1, got"
+            f" sub_rounds={sub_rounds}, levels={levels}"
+        )
     w = (
         F.col(weight_col).cast("long")
         if weight_col
@@ -1677,8 +1696,13 @@ def minimum_spanning_forest(
     driver long before any distributed rounds are needed). The round
     count probe collects one long. Multi-edges collapse to their min
     weight up front, so the shuffled edge set never exceeds the
-    simple-graph size.
+    simple-graph size. ``max_rounds < 1`` raises ValueError before any
+    job: even an edgeless graph takes one round to see it is done.
     """
+    if max_rounds < 1:
+        raise ValueError(
+            f"minimum_spanning_forest: max_rounds must be >= 1, got {max_rounds}"
+        )
     w = (
         F.col(weight_col).cast("long")
         if weight_col
@@ -1903,7 +1927,14 @@ def strongly_connected_components(
     Returns (node, component). Scale shape: every step is a
     node-keyed shuffle on the label frame; the peel shrinks the
     active graph monotonically, and lineage is cut per step (lazy
-    localCheckpoint — the probe materializes it)."""
+    localCheckpoint — the probe materializes it). ``max_rounds < 1``
+    raises ValueError before any job: even an edgeless graph takes one
+    round to see it is done."""
+    if max_rounds < 1:
+        raise ValueError(
+            "strongly_connected_components: max_rounds must be >= 1, got"
+            f" {max_rounds}"
+        )
     e_all = _uv_edges(edges, src, dst).distinct().localCheckpoint(eager=True)
     nodes = (
         e_all.select(F.col("u").alias("node"))
@@ -2038,8 +2069,14 @@ def ancestor_closure(
     within ``max_doublings`` (pathological diameter), same
     loud-failure contract as connected_components.
 
-    Returns (node, ancestor, dist), all LONG.
+    Returns (node, ancestor, dist), all LONG. ``max_doublings < 1``
+    raises ValueError before any job: a non-empty closure needs one
+    doubling to see its fixpoint.
     """
+    if max_doublings < 1:
+        raise ValueError(
+            f"ancestor_closure: max_doublings must be >= 1, got {max_doublings}"
+        )
     p = (
         _uv_edges(edges, src, dst)
         .filter(F.col("u") != F.col("v"))

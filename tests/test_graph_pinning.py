@@ -462,6 +462,13 @@ def test_label_propagation_zero_iterations_rejected(spark):
         ("shortest_paths", "max_hops must be >= 0"),
         ("random_walks_length", "walk_length and n_walks must be >= 1"),
         ("random_walks_count", "walk_length and n_walks must be >= 1"),
+        ("kcore", "rounds must be >= 0"),
+        ("louvain_sub_rounds", "sub_rounds must be >= 0 and levels >= 1"),
+        ("louvain_levels", "sub_rounds must be >= 0 and levels >= 1"),
+        ("minimum_spanning_forest", "max_rounds must be >= 1"),
+        ("strongly_connected_components", "max_rounds must be >= 1"),
+        ("ancestor_closure", "max_doublings must be >= 1"),
+        ("connected_components", "max_iterations must be >= 1"),
     ],
 )
 def test_degenerate_arguments_rejected_before_any_job(
@@ -481,6 +488,21 @@ def test_degenerate_arguments_rejected_before_any_job(
         ),
         "random_walks_length": lambda: graph.random_walks(edges, seeds, 0),
         "random_walks_count": lambda: graph.random_walks(edges, seeds, 3, n_walks=0),
+        "kcore": lambda: graph.kcore(edges, k=2, rounds=-1),
+        "louvain_sub_rounds": lambda: graph.louvain(edges, sub_rounds=-1),
+        "louvain_levels": lambda: graph.louvain(edges, levels=0),
+        "minimum_spanning_forest": lambda: graph.minimum_spanning_forest(
+            edges, max_rounds=0
+        ),
+        "strongly_connected_components": lambda: (
+            graph.strongly_connected_components(edges, max_rounds=0)
+        ),
+        "ancestor_closure": lambda: graph.ancestor_closure(
+            edges, src="src", dst="dst", max_doublings=0
+        ),
+        "connected_components": lambda: graph.connected_components(
+            edges, max_iterations=0
+        ),
     }
     prepartition("true")
     cls = type(edges)

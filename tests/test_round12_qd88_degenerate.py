@@ -21,7 +21,9 @@ import duckdb
 def _augmented_fixture(tmp_path):
     """Copy the committed mini-chain fixture and append degenerate
     non-coinbase txs with ids above the existing max."""
-    src = "/root/repo/fixtures"
+    from graphsense_blocksci_spark import fixtures
+
+    src = str(fixtures.ensure_fixtures())
     for f in ("raw_blocks.parquet", "raw_exchange_rates.parquet"):
         shutil.copy(f"{src}/{f}", tmp_path / f)
     con = duckdb.connect()
