@@ -13,9 +13,18 @@ src/heuristics/tx_identification.cpp; Kalodner et al., USENIX Security
 5. the most frequent output value must occur exactly participantCount
    times, and must not be one of the dust constants 546 / 2730 satoshi.
 
-Implemented as pure array expressions (`size`/`transform`/`filter`/
-`array_distinct`/`aggregate`) — no UDF, no shuffle; the per-row cost is
-O(n_outputs * n_distinct_values), fine for real transaction fan-outs.
+Implemented as one SQL expression of array functions (`size`/
+`transform`/`filter`/`array_distinct`/`array_max`; see
+`functions/sqltext.py`) — no UDF, no shuffle. Condition 5 is evaluated
+flat: each distinct output value is counted once, the max of those
+counts must equal participantCount, and neither dust value may occur
+exactly participantCount times. Given the first half, the second is the
+same as "no max-count value is dust". A NULL output value equals
+nothing, so it is counted zero times. Per row that costs
+O(n_outputs * n_distinct_values) for the value counts, O(n_outputs) per
+dust value, and O(n_inputs^2) for the distinct input identities
+(`array_distinct` over structs compares them pairwise) — fine for real
+transaction fan-outs.
 
 Divergence notes (both documented, both deterministic):
 - when several values tie for the max count, BlockSci picks an
@@ -36,52 +45,41 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from graphsense_blocksci_spark.functions.sqltext import ident
+
 DUST_VALUES = (546, 2730)
 
 
-def is_coinjoin(inputs: Column | str, outputs: Column | str) -> Column:
-    ins = F.col(inputs) if isinstance(inputs, str) else inputs
-    outs = F.col(outputs) if isinstance(outputs, str) else outputs
-
-    n_in = F.coalesce(F.size(ins), F.lit(0))
-    n_out = F.coalesce(F.size(outs), F.lit(0))
-    participants = F.floor((n_out + F.lit(1)) / F.lit(2)).cast("int")
-
+def is_coinjoin_sql(inputs: str, outputs: str) -> str:
+    ins = f"coalesce({ident(inputs)}, array())"
+    outs = f"coalesce({ident(outputs)}, array())"
+    n_in = f"coalesce(size({ident(inputs)}), 0)"
+    n_out = f"coalesce(size({ident(outputs)}), 0)"
+    participants = f"CAST(floor(({n_out} + 1) / 2) AS INT)"
     # Distinct input identities: one per input, keyed by the rendered
     # (address_type, address) pair — multisig is one identity, not its
     # flattened constituents; NULL-rendered inputs count too.
-    input_identities = F.array_distinct(
-        F.transform(
-            F.coalesce(ins, F.array()),
-            lambda x: F.struct(
-                x["address_type"].alias("address_type"),
-                x["address"].alias("address"),
-            ),
-        )
+    n_distinct_in_addrs = (
+        f"size(array_distinct(transform({ins}, i -> named_struct("
+        "'address_type', i.address_type, 'address', i.address))))"
     )
-    n_distinct_in_addrs = F.size(input_identities)
+    max_count = (
+        f"array_max(transform(array_distinct(transform({outs}, o -> o.value)),"
+        f" v -> size(filter({outs}, o -> o.value = v))))"
+    )
+    no_dust_at_max = [
+        f"size(filter({outs}, o -> o.value = {int(d)})) != {participants}"
+        for d in DUST_VALUES
+    ]
+    return "(" + " AND ".join([
+        f"{n_in} >= 2",
+        f"{n_out} >= 3",
+        f"{participants} <= {n_in}",
+        f"{participants} <= {n_distinct_in_addrs}",
+        f"{max_count} = {participants}",
+        *no_dust_at_max,
+    ]) + ")"
 
-    out_values = F.transform(F.coalesce(outs, F.array()), lambda x: x["value"])
-    distinct_values = F.array_distinct(out_values)
-    # (value, frequency) pairs; O(n^2) over a per-tx array — cheap.
-    value_counts = F.transform(
-        distinct_values,
-        lambda v: F.struct(
-            v.alias("value"),
-            F.size(F.filter(out_values, lambda x: x == v)).alias("cnt"),
-        ),
-    )
-    max_count = F.array_max(F.transform(value_counts, lambda s: s["cnt"]))
-    max_is_dust = F.exists(
-        value_counts,
-        lambda s: (s["cnt"] == max_count) & s["value"].isin(*DUST_VALUES),
-    )
 
-    return (
-        (n_in >= 2)
-        & (n_out >= 3)
-        & (participants <= n_in)
-        & (participants <= n_distinct_in_addrs)
-        & (max_count == participants)
-        & ~max_is_dust
-    )
+def is_coinjoin(inputs: str, outputs: str) -> Column:
+    return F.expr(is_coinjoin_sql(inputs, outputs))

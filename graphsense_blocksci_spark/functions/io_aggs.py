@@ -4,6 +4,8 @@ The reference consumes these as BlockSci C++ attributes
 (`tx.input_value`, `len(tx.inputs)` — reference:
 blocksci_export.py:342-345,360-361). Here they are array expressions that
 stay JVM-side inside whole-stage codegen — no explode, no shuffle, no UDF.
+Each is one SQL expression (`functions/sqltext.py`); the `*_sql` forms
+let a plan put several of them into one `selectExpr`.
 """
 
 from __future__ import annotations
@@ -11,21 +13,28 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from graphsense_blocksci_spark.functions.sqltext import ident
 
-def io_total_value(io_col: Column | str) -> Column:
+
+def io_total_value_sql(io_col: str) -> str:
+    return (
+        f"aggregate(coalesce({ident(io_col)}, array()), CAST(0 AS BIGINT),"
+        " (acc, x) -> acc + x.value)"
+    )
+
+
+def io_count_sql(io_col: str) -> str:
+    return f"CAST(coalesce(size({ident(io_col)}), 0) AS INT)"
+
+
+def io_total_value(io_col: str) -> Column:
     """Sum of `.value` over a `list<struct>` I/O column (SURVEY §2.B2).
 
     Empty or NULL arrays (coinbase inputs) total 0.
     """
-    c = F.col(io_col) if isinstance(io_col, str) else io_col
-    return F.aggregate(
-        F.coalesce(c, F.array()),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x["value"],
-    )
+    return F.expr(io_total_value_sql(io_col))
 
 
-def io_count(io_col: Column | str) -> Column:
+def io_count(io_col: str) -> Column:
     """`len(tx.inputs)` / `len(tx.outputs)` (SURVEY §2.B3); NULL -> 0."""
-    c = F.col(io_col) if isinstance(io_col, str) else io_col
-    return F.coalesce(F.size(c), F.lit(0)).cast("int")
+    return F.expr(io_count_sql(io_col))

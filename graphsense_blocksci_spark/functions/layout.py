@@ -4,7 +4,9 @@ The reference buckets surrogate keys so Cassandra partitions stay bounded
 (reference: blocksci_export.py:333,355 `height // BLOCK_BUCKET_SIZE`,
 `tx.index // TX_BUCKET_SIZE`; :368-371 hash prefix). In Spark the same
 derivations become plain column expressions — they stay inside
-whole-stage codegen and cost nothing.
+whole-stage codegen and cost nothing. `bucket_group` and
+`tx_hash_prefix` are one SQL expression each (`functions/sqltext.py`);
+their `*_sql` forms let a plan put them into one `selectExpr`.
 """
 
 from __future__ import annotations
@@ -12,13 +14,22 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from graphsense_blocksci_spark.functions.sqltext import ident
 from graphsense_blocksci_spark.schemas import TX_HASH_PREFIX_LENGTH
 
 
-def bucket_group(col: Column | str, bucket_size: int) -> Column:
+def bucket_group_sql(col: str, bucket_size: int) -> str:
+    return f"CAST(floor({ident(col)} / {int(bucket_size)}) AS BIGINT)"
+
+
+def tx_hash_prefix_sql(col: str, length: int = TX_HASH_PREFIX_LENGTH) -> str:
+    return f"substring(lower(hex({ident(col)})), 1, {int(length)})"
+
+
+def bucket_group(col: str, bucket_size: int) -> Column:
     """``id // bucket_size`` as LongType.
 
-    `F.floor` (not integer cast) matches Python's floor division on
+    `floor` (not an integer cast) matches Python's floor division on
     negatives, though ids are always >= 0 in practice
     (reference: blocksci_export.py:333,355). The group stays LONG in
     the data plane — an int32 group overflows once id/bucket exceeds
@@ -26,19 +37,17 @@ def bucket_group(col: Column | str, bucket_size: int) -> Column:
     Sinks whose schema demands the reference's CQL `int` cast at the
     write boundary, where values are range-checked by construction.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c / F.lit(bucket_size)).cast("long")
+    return F.expr(bucket_group_sql(col, bucket_size))
 
 
-def tx_hash_prefix(col: Column | str, length: int = TX_HASH_PREFIX_LENGTH) -> Column:
+def tx_hash_prefix(col: str, length: int = TX_HASH_PREFIX_LENGTH) -> Column:
     """First `length` lowercase hex chars of a binary hash.
 
     The reference slices `str(tx_hash)[:5]` where BlockSci renders hashes
     as lowercase hex (reference: blocksci_export.py:368-371). Spark's
     `hex()` is uppercase, hence the `lower()`.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.substring(F.lower(F.hex(c)), 1, length)
+    return F.expr(tx_hash_prefix_sql(col, length))
 
 
 def morton_key(x: Column | str, y: Column | str, bits: int = 16) -> Column:

@@ -67,8 +67,7 @@ def ingest_daemon_step(
     hwm = None
     fs, sink_path = hadoop_fs(spark, sink_dir)
     if fs.exists(sink_path):
-        key = block_table(source).select("block_id").schema
-        hwm = high_water_mark(spark.read.schema(key).parquet(sink_dir))
+        hwm = high_water_mark(spark.read.schema("block_id int").parquet(sink_dir))
     pred = delta_predicate(source, hwm, as_of_epoch=as_of_epoch, lag=lag)
     if pred is None:
         return 0

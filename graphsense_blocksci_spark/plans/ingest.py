@@ -14,24 +14,27 @@ The reference runs these as separate multiprocess passes over the chain;
 here they are projections/aggregations of the same raw DataFrames. Each
 table is its own plan: Catalyst shares nothing across separate writes,
 so every table written re-scans its raw input (the four bulk sink
-writes read the raw txs three times and the raw blocks twice). All
-expressions are native columns (whole-stage codegen); the only shuffles
-in the whole ingest are the single groupBy for block_transactions and
-the window for BIP30 dedup.
+writes read the raw txs three times and the raw blocks twice).
+
+Every projection is one `selectExpr` (or `F.expr`) of SQL text built by
+the `*_sql` helpers in `functions/` (`functions/sqltext.py`): a table is
+built in a few dozen py4j round trips instead of hundreds to a thousand
+through the Column API, which matters because the daemon and every
+streaming restart rebuild these plans. The text resolves to native
+expressions (whole-stage codegen, no UDF); the only shuffles in the
+whole ingest are the single groupBy for block_transactions and the
+window for BIP30 dedup.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphsense_blocksci_spark.functions import (
-    bucket_group,
-    io_count,
-    io_total_value,
-    is_coinjoin,
-    tx_hash_prefix,
-)
+from graphsense_blocksci_spark.functions.coinjoin import is_coinjoin_sql
+from graphsense_blocksci_spark.functions.io_aggs import io_count_sql, io_total_value_sql
+from graphsense_blocksci_spark.functions.layout import bucket_group_sql, tx_hash_prefix_sql
+from graphsense_blocksci_spark.functions.sqltext import ident
 from graphsense_blocksci_spark.schemas import (
     BLOCK_BUCKET_SIZE,
     TX_BUCKET_SIZE,
@@ -42,44 +45,40 @@ from graphsense_blocksci_spark.schemas import (
 def block_table(raw_blocks: DataFrame, bucket_size: int = BLOCK_BUCKET_SIZE) -> DataFrame:
     """`block` — 5-col projection with derived partition group
     (reference: blocksci_export.py:332-337)."""
-    return raw_blocks.select(
-        bucket_group("block_id", bucket_size).cast("int").alias("block_id_group"),
-        F.col("block_id").cast("int").alias("block_id"),
-        "block_hash",
-        F.col("timestamp").cast("int").alias("timestamp"),
-        F.col("no_transactions").cast("int").alias("no_transactions"),
+    return raw_blocks.selectExpr(
+        f"CAST({bucket_group_sql('block_id', bucket_size)} AS INT) AS block_id_group",
+        "CAST(`block_id` AS INT) AS block_id",
+        "`block_hash`",
+        "CAST(`timestamp` AS INT) AS timestamp",
+        "CAST(`no_transactions` AS INT) AS no_transactions",
     )
 
 
-def _io_udt(col: str):
+def _io_udt(col: str) -> str:
     """Project a raw-side I/O struct down to the exported UDT shape
     (address, value, address_type) — the reference never exports the
     parser's internal spent-output back-references (schema.cql:15-19)."""
-    return F.transform(
-        F.col(col),
-        lambda x: F.struct(
-            x["address"].alias("address"),
-            x["value"].alias("value"),
-            x["address_type"].alias("address_type"),
-        ),
+    return (
+        f"transform({ident(col)}, x -> named_struct('address', x.address,"
+        " 'value', x.value, 'address_type', x.address_type))"
     )
 
 
 def transaction_table(raw_txs: DataFrame, bucket_size: int = TX_BUCKET_SIZE) -> DataFrame:
     """`transaction` — nested projection incl. totals and the coinjoin
     heuristic (reference: blocksci_export.py:352-365)."""
-    return raw_txs.select(
-        bucket_group("tx_id", bucket_size).cast("int").alias("tx_id_group"),
-        F.col("tx_id").cast("long").alias("tx_id"),
-        "tx_hash",
-        F.col("block_id").cast("int").alias("block_id"),
-        F.col("timestamp").cast("int").alias("timestamp"),
-        "coinbase",
-        io_total_value("inputs").alias("total_input"),
-        io_total_value("outputs").alias("total_output"),
-        _io_udt("inputs").alias("inputs"),
-        _io_udt("outputs").alias("outputs"),
-        is_coinjoin("inputs", "outputs").alias("coinjoin"),
+    return raw_txs.selectExpr(
+        f"CAST({bucket_group_sql('tx_id', bucket_size)} AS INT) AS tx_id_group",
+        "CAST(`tx_id` AS BIGINT) AS tx_id",
+        "`tx_hash`",
+        "CAST(`block_id` AS INT) AS block_id",
+        "CAST(`timestamp` AS INT) AS timestamp",
+        "`coinbase`",
+        f"{io_total_value_sql('inputs')} AS total_input",
+        f"{io_total_value_sql('outputs')} AS total_output",
+        f"{_io_udt('inputs')} AS inputs",
+        f"{_io_udt('outputs')} AS outputs",
+        f"{is_coinjoin_sql('inputs', 'outputs')} AS coinjoin",
     )
 
 
@@ -96,15 +95,16 @@ def tx_prefix_table(
     no upsert, so we make the semantics explicit: keep max tx_id per
     tx_hash via a window — the general last-write-wins dedup operator.
     """
-    projected = raw_txs.select(
-        tx_hash_prefix("tx_hash", prefix_length).alias("tx_prefix"),
-        "tx_hash",
-        F.col("tx_id").cast("long").alias("tx_id"),
+    projected = raw_txs.selectExpr(
+        f"{tx_hash_prefix_sql('tx_hash', prefix_length)} AS tx_prefix",
+        "`tx_hash`",
+        "CAST(`tx_id` AS BIGINT) AS tx_id",
     )
-    w = Window.partitionBy("tx_hash").orderBy(F.desc("tx_id"))
     return (
-        projected.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        projected.selectExpr(
+            "*", "row_number() OVER (PARTITION BY tx_hash ORDER BY tx_id DESC) AS _rn"
+        )
+        .filter("_rn = 1")
         .drop("_rn")
     )
 
@@ -128,29 +128,26 @@ def block_transactions_table(
     it, tx-less blocks are absent — indistinguishable on real chains,
     where every block carries at least its coinbase.
     """
-    summaries = raw_txs.select(
-        F.col("block_id").cast("int").alias("block_id"),
-        F.struct(
-            F.col("tx_id").cast("long").alias("tx_id"),
-            io_count("inputs").alias("no_inputs"),
-            io_count("outputs").alias("no_outputs"),
-            io_total_value("inputs").alias("total_input"),
-            io_total_value("outputs").alias("total_output"),
-        ).alias("tx"),
+    tx = ", ".join([
+        "'tx_id', CAST(`tx_id` AS BIGINT)",
+        f"'no_inputs', {io_count_sql('inputs')}",
+        f"'no_outputs', {io_count_sql('outputs')}",
+        f"'total_input', {io_total_value_sql('inputs')}",
+        f"'total_output', {io_total_value_sql('outputs')}",
+    ])
+    summaries = raw_txs.selectExpr(
+        "CAST(`block_id` AS INT) AS block_id", f"named_struct({tx}) AS tx"
     )
     grouped = summaries.groupBy("block_id").agg(
-        F.sort_array(F.collect_list("tx")).alias("txs")
+        F.expr("sort_array(collect_list(tx)) AS txs")
     )
     if raw_blocks is not None:
-        blocks = raw_blocks.select(F.col("block_id").cast("int").alias("block_id"))
-        grouped = blocks.join(grouped, "block_id", "left").select(
-            "block_id",
-            F.coalesce(
-                "txs", F.array().cast(grouped.schema["txs"].dataType)
-            ).alias("txs"),
+        blocks = raw_blocks.selectExpr("CAST(`block_id` AS INT) AS block_id")
+        grouped = blocks.join(grouped, "block_id", "left").selectExpr(
+            "block_id", "coalesce(txs, array()) AS txs"
         )
-    return grouped.select(
-        bucket_group("block_id", bucket_size).cast("int").alias("block_id_group"),
+    return grouped.selectExpr(
+        f"CAST({bucket_group_sql('block_id', bucket_size)} AS INT) AS block_id_group",
         "block_id",
         "txs",
     )

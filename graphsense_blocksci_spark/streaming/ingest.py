@@ -13,8 +13,10 @@ mechanisms natively:
   late/open windows are held back until the watermark passes, closing
   a window only when no earlier data can still arrive.
 - per-row retry + PK upsert (blocksci_export.py:132-142) →
-  `foreachBatch` with a dedup-before-append write and task retries;
-  the batch id makes redelivery idempotent.
+  `foreachBatch` with a dedup-before-append write and task retries.
+  The append ignores the batch id, so it is not idempotent: a batch
+  re-run after its append committed but before the stream's commit log
+  recorded it appends its rows again (at-least-once at the sink).
 
 The streams read the same parquet layout the batch plans read (a file
 source is what a chain-tip follower drops block files into), and reuse
@@ -48,10 +50,12 @@ def stream_transactions(
 ) -> StreamingQuery:
     """File-source stream of raw txs → `transaction` table appends.
 
-    Effectively-once: the checkpoint guarantees each source file is
-    processed once; the foreachBatch dedups on tx_id within the batch
-    before the idempotent parquet append (the streaming analog of the
-    reference's PK-upsert + infinite retry, blocksci_export.py:132-142).
+    The checkpoint hands each source file to one batch; the foreachBatch
+    dedups on tx_id within the batch and appends it as plain parquet
+    (the streaming analog of the reference's PK-upsert + infinite retry,
+    blocksci_export.py:132-142, without the upsert). Dedup does not
+    span batches, and a batch re-run after its append committed but
+    before its commit-log entry was written appends its rows twice.
     """
     raw = (
         spark.readStream.schema(RAW_TXS)

@@ -1,8 +1,11 @@
 from __future__ import annotations
 
+import contextlib
+import gc
 import os
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -20,6 +23,36 @@ def spark():
     s = get_spark("gbs-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@contextlib.contextmanager
+def py4j_commands(spark):
+    """Count the Python -> JVM py4j commands issued inside the block:
+    ``with py4j_commands(spark) as calls: ...`` leaves the count in
+    ``calls.n``. py4j's memory-release commands (``m\\n...``, sent when
+    Python collects a JavaObject proxy) are not counted, and Python GC
+    is paused while counting so they do not depend on when it runs."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, patched = client.send_command, "send_command" in vars(client)
+    calls = SimpleNamespace(n=0)
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            calls.n += 1
+        return send(command, *args, **kwargs)
+
+    gc_enabled = gc.isenabled()
+    gc.disable()
+    client.send_command = counting
+    try:
+        yield calls
+    finally:
+        if patched:
+            client.send_command = send
+        else:
+            del client.send_command
+        if gc_enabled:
+            gc.enable()
 
 
 @pytest.fixture(scope="session")
