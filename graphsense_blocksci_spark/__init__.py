@@ -33,7 +33,8 @@ re-expresses every capability Spark-first:
 - ``streaming``   — Structured Streaming variant of the ingest daemon
                     (docker/ingest.sh continue/previous-day loop):
                     checkpoint ≙ high-water mark, watermark ≙ previous-day
-                    cutoff, idempotent foreachBatch ≙ PK-upsert retry;
+                    cutoff, the file sink's exactly-once log ≙ PK-upsert
+                    retry;
                     watermarked streaming dedup; stateful sessionizer with
                     idle-timeout flush; streaming ANN (stream-static LSH
                     index join, exact per-batch top-k).

@@ -8,10 +8,7 @@ from graphsense_blocksci_spark.functions.addresses import (
     build_io_struct,
 )
 from graphsense_blocksci_spark.functions.coinjoin import is_coinjoin
-from graphsense_blocksci_spark.functions.io_aggs import (
-    io_total_value,
-    io_count,
-)
+from graphsense_blocksci_spark.functions.io_aggs import io_total_value
 
 __all__ = [
     "bucket_group",
@@ -21,5 +18,4 @@ __all__ = [
     "build_io_struct",
     "is_coinjoin",
     "io_total_value",
-    "io_count",
 ]

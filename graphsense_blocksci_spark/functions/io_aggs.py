@@ -34,7 +34,3 @@ def io_total_value(io_col: str) -> Column:
     """
     return F.expr(io_total_value_sql(io_col))
 
-
-def io_count(io_col: str) -> Column:
-    """`len(tx.inputs)` / `len(tx.outputs)` (SURVEY §2.B3); NULL -> 0."""
-    return F.expr(io_count_sql(io_col))

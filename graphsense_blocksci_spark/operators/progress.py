@@ -17,7 +17,7 @@ Two mechanisms, both zero-cost in the data plane:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -37,6 +37,17 @@ def observed(df: DataFrame, name: str = "progress") -> tuple[DataFrame, Observat
         ),
         obs,
     )
+
+
+def _scalars(df: DataFrame, *aggs: Column) -> list:
+    """Evaluate global aggregates over `df` in one job: they are observed
+    (`Dataset.observe`) while a noop sink drains the scan. Under AQE an
+    `agg().first()` is two jobs, a shuffle map stage and the result."""
+    obs = Observation()
+    names = [f"_{i}" for i in range(len(aggs))]
+    watched = df.observe(obs, *[a.alias(n) for a, n in zip(aggs, names)])
+    watched.write.format("noop").mode("overwrite").save()
+    return [obs.get[n] for n in names]
 
 
 class CountingAccumulator:

@@ -14,6 +14,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from graphsense_blocksci_spark.operators.progress import _scalars
+
 
 def latest_per_group(
     df: DataFrame, group_cols: Sequence[str], order_col: str, descending: bool = True
@@ -47,6 +49,14 @@ def top_k(df: DataFrame, order_cols: Sequence[Column], k: int) -> DataFrame:
     return df.orderBy(*order_cols).limit(k)
 
 
+def high_water_mark(sink: DataFrame, block_col: str = "block_id"):
+    """The sink's max `block_col` — one job; None for an empty sink,
+    which means "nothing ingested yet" (the reference's cold start from
+    block 0, blocksci_export.py:497-505)."""
+    (hwm,) = _scalars(sink.select(block_col), F.max(block_col))
+    return hwm
+
+
 def high_water_mark_filter(
     source: DataFrame, sink: DataFrame, key_col: str
 ) -> DataFrame:
@@ -55,21 +65,16 @@ def high_water_mark_filter(
 
     An EMPTY sink means "nothing ingested yet": the reference starts
     from block 0 and ingests everything (blocksci_export.py:497-505),
-    so the NULL max from an empty aggregate must pass all rows — hence
-    the `isNull()` arm of the predicate (`key > NULL` alone would be
-    NULL and silently drop the entire source on first run).
+    so a NULL max (empty or all-NULL sink) passes every row — `key >
+    NULL` alone would be NULL and silently drop the entire source on
+    first run.
 
-    The single-row max aggregate is broadcast into the filter (a
-    broadcast nested-loop join over one row — no shuffle of `source`).
+    The max is resolved when this is called (`high_water_mark`, one
+    job) and the filter holds it as a literal, so the bound reaches a
+    parquet source's `PushedFilters` and no join is planned.
     """
-    hwm = sink.agg(F.max(key_col).alias("_hwm"))
-    return (
-        source.join(
-            F.broadcast(hwm),
-            F.col("_hwm").isNull() | (F.col(key_col) > F.col("_hwm")),
-        )
-        .drop("_hwm")
-    )
+    hwm = high_water_mark(sink, key_col)
+    return source if hwm is None else source.filter(F.col(key_col) > F.lit(hwm))
 
 
 def skyline_2d(

@@ -38,10 +38,8 @@ import time
 from pyspark.sql import SparkSession
 
 from graphsense_blocksci_spark.operators.progress import observed
-from graphsense_blocksci_spark.plans.incremental import (
-    delta_predicate,
-    high_water_mark,
-)
+from graphsense_blocksci_spark.operators.windows import high_water_mark
+from graphsense_blocksci_spark.plans.incremental import delta_predicate
 from graphsense_blocksci_spark.plans.ingest import block_table
 from graphsense_blocksci_spark.schemas import RAW_BLOCKS, REORG_SAFETY_LAG
 from graphsense_blocksci_spark.sources.sinks import hadoop_fs

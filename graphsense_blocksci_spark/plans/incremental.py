@@ -38,9 +38,11 @@ from __future__ import annotations
 import datetime as dt
 import time
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphsense_blocksci_spark.operators.progress import _scalars
+from graphsense_blocksci_spark.operators.windows import high_water_mark
 from graphsense_blocksci_spark.schemas import REORG_SAFETY_LAG
 
 _DAY_S = 86_400
@@ -85,31 +87,12 @@ def reorg_safety_filter(
 ) -> DataFrame:
     """Never ingest the newest `lag` blocks (reference: conf/btc.cfg:20
     `maxBlockNum: -6`) — a reorg near the tip would otherwise require
-    retractions. The tip is a single-row max broadcast into the filter."""
-    tip = df.agg(F.max(block_col).alias("_tip"))
-    return (
-        df.join(F.broadcast(tip), F.col(block_col) <= F.col("_tip") - lag)
-        .drop("_tip")
-    )
-
-
-def _scalars(df: DataFrame, *aggs: Column) -> list:
-    """Evaluate global aggregates over `df` in one job: they are observed
-    (`Dataset.observe`) while a noop sink drains the scan. Under AQE an
-    `agg().first()` is two jobs, a shuffle map stage and the result."""
-    obs = Observation()
-    names = [f"_{i}" for i in range(len(aggs))]
-    watched = df.observe(obs, *[a.alias(n) for a, n in zip(aggs, names)])
-    watched.write.format("noop").mode("overwrite").save()
-    return [obs.get[n] for n in names]
-
-
-def high_water_mark(sink: DataFrame, block_col: str = "block_id"):
-    """The sink's max `block_col` — one job; None for an empty sink,
-    which means "nothing ingested yet" (the reference's cold start from
-    block 0, blocksci_export.py:497-505)."""
-    (hwm,) = _scalars(sink.select(block_col), F.max(block_col))
-    return hwm
+    retractions. The tip is resolved when this is called (`_scalars`,
+    one job) and the filter holds `tip - lag` as a literal; a frame
+    with no tip (empty or all-NULL) keeps nothing."""
+    (tip,) = _scalars(df.select(block_col), F.max(block_col))
+    keep = F.lit(False) if tip is None else F.col(block_col) <= F.lit(tip - lag)
+    return df.filter(keep)
 
 
 def delta_predicate(

@@ -12,11 +12,16 @@ mechanisms natively:
 - `--previous-day` cutoff (blocksci_export.py:540-553) → WATERMARK:
   late/open windows are held back until the watermark passes, closing
   a window only when no earlier data can still arrive.
-- per-row retry + PK upsert (blocksci_export.py:132-142) →
-  `foreachBatch` with a dedup-before-append write and task retries.
-  The append ignores the batch id, so it is not idempotent: a batch
-  re-run after its append committed but before the stream's commit log
-  recorded it appends its rows again (at-least-once at the sink).
+- per-row retry + PK upsert (blocksci_export.py:132-142) → the FILE
+  SINK's own log (`_spark_metadata/` under the sink). A batch re-run
+  after its append was logged but before the stream's commit log
+  recorded it is skipped, not appended again (exactly-once at the
+  sink, *Structured Streaming*, SIGMOD 2018). There is no upsert and no
+  dedup: `tx_id` is the chain's running index, unique in a well-formed
+  source, so the repeat to guard against is a replayed batch.
+  `spark.read.parquet(sink)` reads the files the log lists; a reader
+  that globs the directory also sees the files of a write that crashed
+  before the log recorded its batch.
 
 The streams read the same parquet layout the batch plans read (a file
 source is what a chain-tip follower drops block files into), and reuse
@@ -26,13 +31,13 @@ DataFrame API.
 
 At scale: the file source lists incrementally (maxFilesPerTrigger
 bounds a micro-batch), the transform is the batch plan (no extra
-shuffle), and the sink append is partitioned by the same bucket
-columns as the batch writer.
+shuffle), and each micro-batch is one write job of plain, unpartitioned
+parquet under the sink directory.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -50,28 +55,22 @@ def stream_transactions(
 ) -> StreamingQuery:
     """File-source stream of raw txs → `transaction` table appends.
 
-    The checkpoint hands each source file to one batch; the foreachBatch
-    dedups on tx_id within the batch and appends it as plain parquet
-    (the streaming analog of the reference's PK-upsert + infinite retry,
-    blocksci_export.py:132-142, without the upsert). Dedup does not
-    span batches, and a batch re-run after its append committed but
-    before its commit-log entry was written appends its rows twice.
+    The checkpoint hands each source file to one batch, and the parquet
+    file sink appends the batch's transformed rows once: its
+    `_spark_metadata/` log skips a batch it already holds (see the
+    module docstring).
     """
     raw = (
         spark.readStream.schema(RAW_TXS)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-    txs = transaction_table(raw)
-
-    def _write_batch(batch: DataFrame, batch_id: int) -> None:
-        deduped = batch.dropDuplicates(["tx_id"])
-        deduped.write.mode("append").parquet(sink_dir)
-
     writer = (
-        txs.writeStream.foreachBatch(_write_batch)
+        transaction_table(raw)
+        .writeStream.format("parquet")
+        .option("path", sink_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+        .outputMode("append")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -94,6 +94,22 @@ class TestHighWaterMark:
         out = high_water_mark_filter(sample, sample, "version")
         assert out.count() == 0
 
+    def test_bounds_are_pushed_literals(self, spark, tmp_path):
+        """The HWM and the reorg lag reach a parquet scan as literal
+        `PushedFilters`; neither plans a join."""
+        path = str(tmp_path / "src")
+        spark.range(100_000).selectExpr("CAST(id AS INT) AS k").write.parquet(path)
+        src = spark.read.parquet(path)
+        for out, bound in (
+            (high_water_mark_filter(src, src.filter("k <= 90000"), "k"),
+             "GreaterThan(k,90000)"),
+            (reorg_safety_filter(src, "k", lag=6), "LessThanOrEqual(k,99993)"),
+        ):
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "Join" not in plan
+            pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+            assert len(pushed) == 1 and bound in pushed[0]
+
 
 class TestAsofJoin:
     @pytest.fixture(scope="class")

@@ -1,5 +1,5 @@
 """Structured Streaming ingest daemon tests: checkpoint resume
-(--continue), watermarked windows (--previous-day), idempotent sink."""
+(--continue), watermarked windows (--previous-day), exactly-once sink."""
 
 from __future__ import annotations
 
@@ -47,6 +47,33 @@ def test_stream_resume_is_incremental(spark, tmp_path):
     q2.awaitTermination(120)
     n2 = spark.read.parquet(sink).count()
     assert n1 == n2 == batch_df.count()
+
+
+def test_stream_replay_after_lost_commit_appends_nothing(spark, tmp_path):
+    """A batch re-run after its append landed but before the checkpoint
+    recorded its commit adds no rows: the file sink's log already holds
+    the batch. Every micro-batch is at most one job."""
+    batch_df, _ = _raw_txs(spark, tmp_path)
+    src = str(tmp_path / "src4")
+    batch_df.repartition(4).write.parquet(src)
+    sink, ckpt = str(tmp_path / "sink4"), tmp_path / "ckpt4"
+    tracker = spark.sparkContext.statusTracker()
+
+    def drain() -> int:
+        q = stream_transactions(
+            spark, src, sink, str(ckpt), max_files_per_trigger=1, available_now=True
+        )
+        q.awaitTermination(120)
+        jobs = tracker.getJobIdsForGroup(str(q.runId))
+        assert len(jobs) <= len(q.recentProgress)
+        return spark.read.parquet(sink).count()
+
+    assert drain() == batch_df.count()
+    commits = ckpt / "commits"
+    assert sorted(p.name for p in commits.iterdir() if p.name.isdigit()) == list("0123")
+    (commits / "3").unlink()
+    (commits / ".3.crc").unlink(missing_ok=True)
+    assert drain() == batch_df.count()
 
 
 def test_stateful_sessionize_across_batches(spark, tmp_path):
