@@ -26,7 +26,8 @@ iterations (a 100M-edge chain would never finish); the star algorithm
 is the 100 TB-safe choice because high-degree hubs are broken up by
 large-star instead of being re-shuffled whole every round.
 
-Scale notes:
+Scale notes (connected components; the other loops state their own
+shape in their docstrings):
 
 - ``localCheckpoint(eager=True)`` after every iteration cuts the
   lineage — without it the plan doubles per round and Catalyst
@@ -574,167 +575,163 @@ def pagerank(
     The weighted counterpart of `connected_components`' label passing:
     each round every node ships rank/out_degree along its out-edges,
     contributions are summed per target, and the damping mixes in the
-    uniform teleport. Plan per round, the GraphX superstep shape (one
-    message aggregation per vertex; Gonzalez et al., OSDI 2014): one
-    join of the rank rows against the static edge frame, then ONE
-    ``groupBy(node)`` over those contributions unioned with the rank
-    rows themselves. Rank rows carry the node attributes — ``_deg``
-    (null for a dangling node) and ``_is_seed`` — so the aggregate
-    rebuilds a whole rank row (sum of contributions, max of each
-    attribute) and no node frame is joined per round. From
-    ``_PREPARTITION_MIN_NODES`` nodes on (a constant; an explicit
-    ``spark.graphsense.prepartitionStatic`` true or false overrides it)
-    the static edge frame is repartitioned on ``_src`` ONCE and
+    teleport vector t plus the mass held by dangling nodes:
+    r₍ₖ₊₁₎ = d·M·rₖ + gₖ·t with gₖ = (1−d) + d·Dₖ, where Dₖ is the
+    dangling mass of rₖ and r₀ = t. Dₖ is the only global value a round
+    needs, and the recurrence is linear, so it is consumed once, at the
+    end, instead of once per round: every rₖ is Σⱼ βₖ,ⱼ·hⱼ over the
+    basis hⱼ = Mʲ·t, which needs no global value. All ``iterations``
+    rounds compute h₁ … h_K as ONE lazy plan ended by one eager
+    localCheckpoint; that checkpoint observes (``Dataset.observe``) the
+    dangling mass mⱼ of each hⱼ as an exact ``decimal(38, 36)`` sum, so
+    the observed figures, and the β solved from them, do not depend on
+    the order in which task partials merge. The driver then solves the
+    K-step scalar recurrence (β₀ = 1; Dₖ = Σⱼ βₖ,ⱼ·mⱼ; βₖ₊₁ = (gₖ,
+    d·βₖ)) and projects rank = Σⱼ β_K,ⱼ·hⱼ. There is no driver round
+    trip, broadcast literal or checkpoint between rounds.
+
+    Plan per round, the GraphX superstep shape (one message aggregation
+    per vertex; Gonzalez et al., OSDI 2014): one join of the state rows
+    against the static frame ``hop`` — the distinct out-edges plus one
+    self row (``_dst`` null) per node — then ONE ``groupBy`` on the
+    target node that sums the contributions hⱼ(u)/deg(u) into hⱼ₊₁ and
+    carries the node's out-degree and history h₀ … hⱼ through its self
+    row. The state is read once per round, so the lazy plan grows
+    linearly in K. Cost of the history: a node row carries up to K+1
+    doubles (O(N·K) state), and the self rows shuffle O(N·K²) doubles
+    over a call, besides the O(E) contributions of every round. Measured
+    on the q84 graph (local[4]), a round adds 0 jobs with AQE off (the
+    whole loop is one job) and at most 1 with it on, because AQE runs
+    every shuffle-map stage as its own job; a q84 call runs 23 jobs,
+    against 42 with a checkpoint and a dangling-mass literal per round.
+    The rounds are built from SQL text (one py4j round trip per
+    expression). No literal varies with the data inside the loop; the
+    β literals enter only the final projection, so an unseen input
+    compiles one whole-stage class for them, not one per round.
+
+    Setup is one eager checkpoint, ``rows``: one self row per node with
+    its out-degree (one aggregate over both edge ends) and seed flag,
+    plus the distinct edges; both halves read the same distinct-edge
+    exchange, and the node and teleport-set counts ride on the same job.
+    ``hop`` is its ``(node, _dst)`` projection and the initial state its
+    self rows. From ``_PREPARTITION_MIN_NODES`` nodes on (a constant; an
+    explicit ``spark.graphsense.prepartitionStatic`` true or false
+    overrides it) ``rows`` is repartitioned on ``node`` ONCE and
     persisted (cached plans keep their partitioning under AQE), so the
-    static side of every round's join is exchange-free — the edge frame
-    is shuffled once at setup instead of once per round; below it the
-    frame is broadcast-sized and stays a plain checkpoint (measured:
-    pre-partitioning is pure overhead there).
+    static side of every round's join is exchange-free and a round's
+    only exchange is its contribution shuffle; below it the frames are
+    broadcast-sized and pre-partitioning is pure overhead (measured), so
+    AQE picks the join.
 
-    The dangling-mass correction costs no job of its own: each round's
-    eager localCheckpoint observes (``Dataset.observe``) the mass held
-    by rows with a null ``_deg``, and the next round reads that scalar
-    as a literal. Setup is two eager checkpoints: the distinct edges, and
-    the nodes with their out-degree (one aggregate over both edge ends),
-    whose node / teleport-set / dangling-seed counts ride on the same
-    job. Measured per round on the q84 and q130 graphs: AQE on, 3 jobs
-    and 4 stages (a broadcast of one side of the ranks⋈edges join, the
-    contribution shuffle, the checkpoint), because AQE runs every
-    shuffle-map stage and broadcast as its own job; AQE off, 2 jobs and
-    3 stages, and 1 job on a 7-edge toy graph (the checkpoint).
+    An edge with a NULL end is no graph edge: it counts toward its
+    source's out-degree but carries no rank, and a NULL node gets no row.
 
-    The literal is part of the generated code, so a round whose dangling
-    mass was never seen before compiles one new whole-stage class
-    (measured: 22 Janino compiles per q84 call on an unseen input, 0 on a
-    repeated one; the observed sum adds task partials in completion
-    order, so over a multi-partition rank frame a repeated call can
-    differ in the last bits and compile again). Feeding the scalar
-    through a one-row broadcast relation instead compiles nothing new
-    but adds a job per round, and measured ~25 % more CPU per q84 call
-    even on unseen inputs (local[4], sf0.01-sized lineitem).
-
-    Float caveat (why the registry entry is rows-only): per-node sums
-    are partition-order-dependent doubles, so cross-engine comparison
-    is tolerance-based (pytest vs a dense numpy reference), not
-    hash-exact like the integer/graph oracles.
+    Float caveat (why the registry entry is rows-only): the per-node
+    contribution sums are partition-order-dependent doubles, so
+    cross-engine comparison is tolerance-based (pytest vs a dense numpy
+    reference), not hash-exact like the integer/graph oracles.
 
     ``seeds`` (a frame with a ``node`` column) switches to
     PERSONALIZED PageRank: the teleport mass (1-d) and the dangling
     return both land uniformly on the seed set instead of all nodes —
-    the standard random-walk-with-restart relevance score. Plan shape
-    is unchanged: the seed flag is one extra broadcast-joined boolean
-    on the node frame, and a round runs the same jobs as a plain one.
-    The initial rank is uniform over seeds (non-seeds start at 0).
+    the standard random-walk-with-restart relevance score. Only t
+    changes (uniform over the seeds, 0 elsewhere; it is also the initial
+    rank), so the plan is the same as a plain call's.
     """
     if iterations < 1:
         raise ValueError(f"pagerank: iterations must be >= 1, got {iterations}")
-    e = _directed_edges(edges, src, dst).localCheckpoint(eager=True)
-    # the node frame carries every per-node attribute a round needs:
-    # _deg (out-degree, null for a dangling node) and _is_seed; one
-    # aggregate over both edge ends yields every node and its out-degree
+    e = _directed_edges(edges, src, dst)
+    # every node with its out-degree (_deg, null for a dangling node): one
+    # aggregate over both edge ends
     nodes = (
-        e.select(F.col("_src").alias("node"), F.lit(1).alias("_out"))
-        .union(e.select(F.col("_dst").alias("node"), F.lit(0).alias("_out")))
+        e.selectExpr("_src AS node", "1 AS _out")
+        .union(e.selectExpr("_dst AS node", "0 AS _out"))
         .groupBy("node")
-        .agg(F.nullif(F.sum("_out"), F.lit(0)).alias("_deg"))
+        .agg(F.expr("nullif(sum(_out), 0) AS _deg"))
     )
     if seeds is not None:
         nodes = nodes.join(
             F.broadcast(
-                seeds.select(F.col("node").cast("long").alias("node"))
+                seeds.selectExpr("CAST(node AS BIGINT) AS node")
                 .distinct()
-                .withColumn("_is_seed", F.lit(True))
+                .selectExpr("node", "true AS _is_seed")
             ),
             "node",
             "left",
-        ).select(
-            "node", "_deg", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed")
-        )
+        ).selectExpr("node", "_deg", "coalesce(_is_seed, false) AS _is_seed")
     else:
-        nodes = nodes.withColumn("_is_seed", F.lit(True))
-    # node, teleport-set and dangling-seed counts ride on the checkpoint
-    # job itself (Dataset.observe) instead of three count() jobs
+        nodes = nodes.selectExpr("node", "_deg", "true AS _is_seed")
+    # One frame holds one self row (_dst null) per node with its attributes
+    # and the distinct edges; both halves read the same distinct-edge
+    # exchange, which the plan computes once. The node and teleport-set
+    # counts ride on its checkpoint job (Dataset.observe).
     setup = Observation()
-    nodes = nodes.observe(
-        setup,
-        F.count(F.lit(1)).alias("n"),
-        F.count_if("_is_seed").alias("n_tele"),
-        F.count_if(F.col("_is_seed") & F.col("_deg").isNull()).alias(
-            "n_dangling_seeds"
-        ),
-    ).localCheckpoint(eager=True)
+    rows = (
+        nodes.selectExpr("node", "CAST(NULL AS BIGINT) AS _dst", "_deg", "_is_seed")
+        .union(e.selectExpr("_src", "_dst", "NULL", "NULL"))
+        .observe(
+            setup,
+            F.expr("count_if(_dst IS NULL) AS n"),
+            F.expr("count_if(_is_seed) AS n_tele"),
+        )
+        .localCheckpoint(eager=True)
+    )
     counts = setup.get
     if counts["n"] == 0:
-        return nodes.select("node").withColumn("rank", F.lit(0.0))
+        return rows.selectExpr("node", "0D AS rank")
     n_tele = counts["n_tele"]
     if n_tele == 0:
         raise ValueError("personalized pagerank: no seed appears in the graph")
     # Scale-adaptive static-frame layout (guide §2.4): at cluster scale the
-    # per-round ranks⋈e join is a sort-merge join, so the STATIC edge frame
-    # is re-shuffled every round; pre-partitioning e on the join key (_src),
-    # persisted so the partitioning survives AQE, makes the static side of
-    # every round's join exchange-free. No node frame is joined per round
-    # (the rank rows carry the node attributes), so only e is pinned.
-    # Below the threshold e is broadcast-sized and this is pure overhead
-    # (measured — see _PREPARTITION_MIN_NODES), so the local plan is kept;
-    # an explicit spark.graphsense.prepartitionStatic overrides the
-    # threshold either way. Rank values are unchanged either way:
-    # partitioning only reorders float summation within the same per-node
-    # groups, and the parity test pins both paths to the dense reference.
-    # Every round's ranks frame is checkpointed, so the result no longer
-    # reads the pinned edge frame once the block exits.
+    # per-round state⋈hop join is a sort-merge join, so the STATIC hop
+    # frame would be re-shuffled every round; pre-partitioning the rows on
+    # the join key, persisted so the partitioning survives AQE, makes the
+    # static side of every round's join exchange-free. The initial state
+    # is read from the same pinned rows and every later state arrives
+    # partitioned on node by the previous round's aggregate, so a round's
+    # only exchange is its contribution shuffle. Below the threshold this
+    # is pure overhead (measured — see _PREPARTITION_MIN_NODES); an
+    # explicit spark.graphsense.prepartitionStatic overrides the threshold
+    # either way. Partitioning only reorders float summation within the
+    # same per-node groups, and the parity tests pin both paths to the
+    # dense reference. The final checkpoint is taken inside the block, so
+    # the result no longer reads the pinned frame once the block exits.
     with _pinned(
-        e, "_src", local=None, adaptive=counts["n"] >= _PREPARTITION_MIN_NODES
-    ) as e:
-        tele = F.when(F.col("_is_seed"), F.lit(1.0 / n_tele)).otherwise(F.lit(0.0))
-        ranks = nodes.withColumn("rank", tele)
-        # dangling mass of the current ranks: every seed starts at
-        # 1/n_tele, then each round's value is observed on that round's
-        # checkpoint and enters the next round as a scalar
-        dangling = counts["n_dangling_seeds"] / n_tele
-        # One aggregate per node: the contributions it receives plus its
-        # own rank row (c null), which brings _deg and _is_seed through the
-        # same groupBy instead of a node re-join. The Column expressions
-        # are loop-invariant and built once: building them every round
-        # through py4j was about half of a round's plan-building CPU
-        # (measured on the q84 graph, local[4]: ~77 -> ~37 ms a round).
-        on_src = F.col("node") == F.col("_src")
-        msg = [
-            F.col("_dst").alias("node"),
-            (F.col("rank") / F.col("_deg")).alias("c"),
-            F.lit(None).cast("long").alias("_deg"),
-            F.lit(None).cast("boolean").alias("_is_seed"),
-        ]
-        own = ["node", F.lit(None).cast("double").alias("c"), "_deg", "_is_seed"]
-        attrs = [
-            F.sum("c").alias("in_rank"),
-            F.max("_deg").alias("_deg"),
-            F.max("_is_seed").alias("_is_seed"),
-        ]
-        teleport = F.lit(1.0 - damping) * tele
-        inflow = F.lit(damping) * F.coalesce(F.col("in_rank"), F.lit(0.0))
-        held_mass = F.sum(F.when(F.col("_deg").isNull(), F.col("rank"))).alias("d")
-        for _ in range(iterations):
-            held = Observation()
-            ranks = (
-                ranks.join(e, on_src)
-                .select(*msg)
-                .unionByName(ranks.select(*own))
-                .groupBy("node")
-                .agg(*attrs)
-                .select(
-                    "node",
-                    "_deg",
-                    "_is_seed",
-                    (
-                        teleport + F.lit(damping) * F.lit(dangling) * tele + inflow
-                    ).alias("rank"),
-                )
-                .observe(held, held_mass)
-                .localCheckpoint(eager=True)
-            )
-            dangling = held.get["d"] or 0.0
-    return ranks.select("node", "rank")
+        rows, "node", local=None, adaptive=counts["n"] >= _PREPARTITION_MIN_NODES
+    ) as rows:
+        hop = rows.select("node", "_dst")
+        state = rows.where("_dst IS NULL").selectExpr(
+            "node", "_deg", f"IF(_is_seed, {1.0 / n_tele!r}D, 0D) AS _h0"
+        )
+        # Each round is built from SQL text (functions/sqltext.py: one py4j
+        # round trip per expression instead of one per Column node), and
+        # the carried history's aggregates are built once. A joined self
+        # row (_dst null) brings its node's _deg and h_0..h_j to its own
+        # group; an edge row brings one contribution h_j(u)/deg(u) to _dst.
+        to = F.expr("coalesce(_dst, node) AS node")
+        keep = [F.expr("max(IF(_dst IS NULL, _deg, NULL)) AS _deg")]
+        for j in range(iterations):
+            keep.append(F.expr(f"max(IF(_dst IS NULL, _h{j}, NULL)) AS _h{j}"))
+            step = F.expr(f"sum(IF(_dst IS NULL, NULL, _h{j} / _deg)) AS _h{j + 1}")
+            state = state.join(hop, "node").groupBy(to).agg(step, *keep)
+        held = Observation()
+        state = state.observe(
+            held,
+            *(
+                F.expr(f"sum(IF(_deg IS NULL, CAST(_h{j} AS DECIMAL(38, 36)), NULL)) AS m{j}")
+                for j in range(iterations)
+            ),
+        ).localCheckpoint(eager=True)
+        masses = held.get
+        m = [float(masses[f"m{j}"] or 0) for j in range(iterations)]
+    # r_k = Σ_j beta[j]·h_j; a round shifts the basis one step (times d)
+    # and adds g_k·t = g_k·h_0
+    beta = [1.0]
+    for _ in range(iterations):
+        gain = (1.0 - damping) + damping * sum(b * mj for b, mj in zip(beta, m))
+        beta = [gain] + [damping * b for b in beta]
+    rank = " + ".join(f"{b!r}D * coalesce(_h{j}, 0D)" for j, b in enumerate(beta))
+    return state.selectExpr("node", f"{rank} AS rank")
 
 
 def shortest_paths(

@@ -39,6 +39,7 @@ from graphsense_blocksci_spark.schemas import (
     BLOCK_BUCKET_SIZE,
     TX_BUCKET_SIZE,
     TX_HASH_PREFIX_LENGTH,
+    TRANSACTION,
 )
 
 
@@ -57,10 +58,16 @@ def block_table(raw_blocks: DataFrame, bucket_size: int = BLOCK_BUCKET_SIZE) -> 
 def _io_udt(col: str) -> str:
     """Project a raw-side I/O struct down to the exported UDT shape
     (address, value, address_type) — the reference never exports the
-    parser's internal spent-output back-references (schema.cql:15-19)."""
+    parser's internal spent-output back-references (schema.cql:15-19).
+
+    The cast gives the array the declared `schemas.TRANSACTION` type,
+    whose elements may be NULL: the transform's own type says they may
+    not, and the stream's file sink would write that, while batch
+    writers write every nested field nullable."""
     return (
-        f"transform({ident(col)}, x -> named_struct('address', x.address,"
+        f"CAST(transform({ident(col)}, x -> named_struct('address', x.address,"
         " 'value', x.value, 'address_type', x.address_type))"
+        f" AS {TRANSACTION[col].dataType.simpleString()})"
     )
 
 

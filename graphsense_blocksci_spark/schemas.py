@@ -42,11 +42,15 @@ NULL_ADDRESS_TYPE_CODES = (1, 7, 10)  # nonstandard, nulldata, witness_unknown
 MULTISIG_TYPE_CODE = 6
 
 # --- nested types (schema.cql:15-19, 43-49) --------------------------------
+# Every field of the I/O struct, and every element of the `transaction`
+# arrays that hold it, is nullable: parquet writers store nested fields
+# that way, so the batch and the stream `transaction` sinks both read back
+# this type (plans/ingest.py casts the arrays to it).
 TX_INPUT_OUTPUT = T.StructType(
     [
         T.StructField("address", T.ArrayType(T.StringType()), True),
-        T.StructField("value", T.LongType(), False),
-        T.StructField("address_type", T.ShortType(), False),
+        T.StructField("value", T.LongType(), True),
+        T.StructField("address_type", T.ShortType(), True),
     ]
 )
 

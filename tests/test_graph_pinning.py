@@ -336,14 +336,60 @@ def test_hits_pin_parity_and_release(spark, prepartition):
 
 
 def test_pagerank_pin_release(spark, prepartition):
-    """pagerank under the forced cluster profile pins its edge frame and
-    must release it before returning."""
+    """pagerank under the forced cluster profile pins its hop frame (the
+    out-edges plus a self row per node) and must release it before
+    returning."""
     edges = _toy_edges(spark)
     prepartition("true")
     before = _cached_entries(spark)
     ranks = graph.pagerank(edges, iterations=3)
     assert _cached_entries(spark) == before, "pagerank leaked persisted frames"
     assert abs(sum(r["rank"] for r in ranks.collect()) - 1.0) < 1e-9
+
+
+def test_pagerank_pinned_loop_has_one_exchange_per_round(spark, prepartition):
+    """Under the cluster profile the whole loop is one executed plan with
+    one Exchange per round (the contribution shuffle) and none over the
+    pinned rows: each round's sort-merge join reads the pinned scan as it
+    is partitioned, and the state as the previous round's aggregate left
+    it. Joins are kept off broadcast, as at cluster scale."""
+    from tools.plan_audit import audit
+
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    cls = type(spark.range(1))
+    real_ckpt = cls.localCheckpoint
+    plans = []
+
+    def local_checkpoint(self, *args, **kwargs):
+        out = real_ckpt(self, *args, **kwargs)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    prepartition("true")
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        cls.localCheckpoint = local_checkpoint
+        graph.pagerank(spark.createDataFrame(EDGES, "src: long, dst: long"), iterations=4)
+    finally:
+        cls.localCheckpoint = real_ckpt
+        for k, v in prev.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    final = plans[-1].split("== Final Plan ==", 1)[1].split("\n+- == Initial Plan ==")[0]
+    # the pinned relation prints the plan it was built with (its own
+    # repartition Exchange) under each scan; only the loop's plan counts
+    loop, depth = [], None
+    for ln in final.splitlines():
+        col = len(ln) - len(ln.lstrip(" :+-"))
+        if depth is not None and col > depth:
+            continue
+        depth = ln.find("InMemoryRelation") if "InMemoryRelation" in ln else None
+        loop.append(ln)
+    shape = audit("\n".join(loop))
+    assert "InMemoryTableScan" in final, final
+    assert shape["sort_merge_joins"] == 4, final
+    assert shape["exchanges"] == 4, final
 
 
 # ------------------------------------------------------- failure injection
@@ -387,7 +433,8 @@ def test_pinned_operator_releases_on_failure(spark, prepartition, monkeypatch, o
     propagates and leaves the CacheManager as it found it. Faults: the
     pin's own materializing count (the first pin, or the second pin
     taken), and the second localCheckpoint taken while a pin is held
-    (mid-loop). Spark 4's classic DataFrame overrides
+    (mid-loop; pagerank takes only one, the loop's final checkpoint, so
+    its fault is injected there). Spark 4's classic DataFrame overrides
     pyspark.sql.DataFrame, so the concrete class is patched."""
     edges = spark.createDataFrame(EDGES, "src: long, dst: long")
     seeds = spark.createDataFrame([(1,), (6,)], "node: long")
@@ -401,6 +448,7 @@ def test_pinned_operator_releases_on_failure(spark, prepartition, monkeypatch, o
     before = _cached_entries(spark)
     seen = {"pin_counts": 0, "ckpts": 0}
     failing_pin = {"first_pin_count": 1, "second_pin_count": 2}.get(fault)
+    failing_ckpt = 1 if op == "pagerank" else 2
 
     def count(self):
         if getattr(self, "is_cached", False):
@@ -412,7 +460,7 @@ def test_pinned_operator_releases_on_failure(spark, prepartition, monkeypatch, o
     def local_checkpoint(self, *args, **kwargs):
         if fault == "mid_loop" and _cached_entries(spark) > before:
             seen["ckpts"] += 1
-            if seen["ckpts"] == 2:
+            if seen["ckpts"] == failing_ckpt:
                 raise _Injected(fault)
         return real_ckpt(self, *args, **kwargs)
 

@@ -139,6 +139,29 @@ def test_ingest_all_names_and_types_match_declared_schemas(spark, fixture_dir):
         assert got == want, name
 
 
+def test_transaction_sinks_read_back_the_declared_nested_types(spark, fixture_dir, tmp_path):
+    """The batch `transaction` sink and the stream's file sink, each read
+    back, hold `inputs`/`outputs` with the nested types, nullability
+    included, that schemas.TRANSACTION declares."""
+    from graphsense_blocksci_spark.sources import write_bucketed_table
+    from graphsense_blocksci_spark.streaming import stream_transactions
+
+    raw = load_raw_txs(spark, fixture_dir)
+    raw.write.parquet(str(tmp_path / "src"))
+    batch, stream = str(tmp_path / "batch"), str(tmp_path / "stream")
+    write_bucketed_table(transaction_table(raw), batch, "tx_id_group", "tx_id")
+    stream_transactions(
+        spark, str(tmp_path / "src"), stream, str(tmp_path / "ckpt"), available_now=True
+    ).awaitTermination(120)
+
+    def nested(schema):
+        return {f.name: f.dataType.jsonValue() for f in schema if f.name in ("inputs", "outputs")}
+
+    declared = nested(schemas.TRANSACTION)
+    assert nested(spark.read.parquet(batch).schema) == declared
+    assert nested(spark.read.parquet(stream).schema) == declared
+
+
 # py4j commands to build each table, counted after one warm call. Each
 # helper is one SQL text per column, so a build is a handful of
 # selectExpr calls; through the Column API the same builds took 1,215,

@@ -400,24 +400,10 @@ def test_pagerank_matches_dense_reference(spark):
     df = spark.createDataFrame(edges, "src: long, dst: long")
     got = {r["node"]: r["rank"] for r in pagerank(df, iterations=12).collect()}
 
-    nodes = sorted({x for e in edges for x in e})
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    out = {}
-    for a, b in set(edges):
-        out.setdefault(a, []).append(b)
-    r = [1.0 / n] * n
-    d = 0.85
-    for _ in range(12):
-        nxt = [0.0] * n
-        dangling = sum(r[idx[v]] for v in nodes if v not in out)
-        for a, targets in out.items():
-            share = r[idx[a]] / len(targets)
-            for b in targets:
-                nxt[idx[b]] += share
-        r = [(1.0 - d) / n + d * (dangling / n + x) for x in nxt]
-    for v in nodes:
-        assert abs(got[v] - r[idx[v]]) < 1e-9, v
+    want = _dense_pagerank(edges, sorted({x for e in edges for x in e}), 12)
+    assert set(got) == set(want)
+    for v, r in want.items():
+        assert abs(got[v] - r) < 1e-9, v
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
@@ -529,6 +515,151 @@ def test_pagerank_seed_not_in_graph_raises(spark):
     seeds = spark.createDataFrame([(99,)], "node: long")
     with _pytest.raises(ValueError, match="no seed appears"):
         pagerank(df, seeds=seeds)
+
+
+def _random_digraph(seed: int = 11, n: int = 2000):
+    """A seeded directed graph on ``n`` non-contiguous node ids: about a
+    tenth of the nodes have no out-edge (dangling), some nodes loop on
+    themselves and some edges repeat. Returns the edge list (duplicates
+    included), the sorted node ids and a 50-node seed set that holds
+    dangling nodes too."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    ids = rng.permutation(n).astype(np.int64) * 7919 + 3
+    movers = n - n // 10
+    edges = [
+        (int(ids[a]), int(ids[b]))
+        for a, b in zip(rng.integers(0, movers, 4 * n), rng.integers(0, n, 4 * n))
+    ]
+    edges += [(int(ids[a]), int(ids[a])) for a in range(0, movers, 37)]
+    edges += [edges[i] for i in rng.integers(0, len(edges), n // 4)]
+    # every dangling node is reached at least once
+    edges += [(int(ids[a]), int(ids[b])) for a, b in zip(range(n - movers), range(movers, n))]
+    nodes = sorted({v for e in edges for v in e})
+    seeds = [int(v) for v in rng.choice(ids[: n // 2], 40, replace=False)]
+    seeds += [int(v) for v in ids[movers : movers + 10]]
+    return edges, nodes, seeds
+
+
+def _dense_pagerank(edges, nodes, iterations, seeds=None, d=0.85):
+    """The recurrence in numpy: r <- (1-d)·t + d·D·t + d·M·r over the
+    distinct edges, t uniform over the seeds (all nodes by default)."""
+    import numpy as np
+
+    idx = {v: i for i, v in enumerate(nodes)}
+    uniq = sorted(set(edges))
+    src = np.array([idx[a] for a, _ in uniq])
+    dst = np.array([idx[b] for _, b in uniq])
+    deg = np.bincount(src, minlength=len(nodes)).astype(float)
+    tele = np.zeros(len(nodes))
+    tele[[idx[v] for v in (seeds or nodes)]] = 1.0
+    tele /= tele.sum()
+    r = tele.copy()
+    for _ in range(iterations):
+        nxt = np.zeros(len(nodes))
+        np.add.at(nxt, dst, r[src] / deg[src])
+        r = (1 - d) * tele + d * r[deg == 0].sum() * tele + d * nxt
+    return dict(zip(nodes, r))
+
+
+@pytest.fixture
+def shuffle_width(spark):
+    """Setter for spark.sql.shuffle.partitions, restored after the test."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    yield lambda n: spark.conf.set(key, str(n))
+    spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize("width", [4, 7])
+def test_pagerank_matches_dense_reference_on_random_graph(spark, shuffle_width, width):
+    """Plain and personalized PageRank on a 2,000-node graph with dangling
+    nodes, self-loops and duplicate edges equal the numpy recurrence within
+    1e-12 at 1, 3 and 10 iterations, on a 4- and a 7-partition shuffle."""
+    from graphsense_blocksci_spark.operators.graph import pagerank
+
+    edges, nodes, seeds = _random_digraph()
+    shuffle_width(width)
+    df = spark.createDataFrame(edges, "src: long, dst: long")
+    seed_df = spark.createDataFrame([(v,) for v in seeds], "node: long")
+    for iterations in (1, 3, 10):
+        for s in (None, seeds):
+            got = pagerank(
+                df, iterations=iterations, seeds=None if s is None else seed_df
+            ).collect()
+            want = _dense_pagerank(edges, nodes, iterations, s)
+            assert len(got) == len(want)
+            worst = max(abs(r["rank"] - want[r["node"]]) for r in got)
+            assert worst < 1e-12, (iterations, s is not None, worst)
+
+
+def test_pagerank_pinned_path_on_random_graph(spark, shuffle_width):
+    """Under spark.graphsense.prepartitionStatic=true the pinned path gives
+    the same ranks within 1e-12 and leaves no cache entry behind."""
+    from graphsense_blocksci_spark.operators.graph import pagerank
+
+    edges, nodes, seeds = _random_digraph()
+    shuffle_width(7)
+    df = spark.createDataFrame(edges, "src: long, dst: long")
+    seed_df = spark.createDataFrame([(v,) for v in seeds], "node: long")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    spark.conf.set("spark.graphsense.prepartitionStatic", "true")
+    try:
+        for s, sdf in ((None, None), (seeds, seed_df)):
+            got = pagerank(df, iterations=10, seeds=sdf).collect()
+            assert cache.numCachedEntries() == before
+            want = _dense_pagerank(edges, nodes, 10, s)
+            assert max(abs(r["rank"] - want[r["node"]]) for r in got) < 1e-12
+    finally:
+        spark.conf.unset("spark.graphsense.prepartitionStatic")
+
+
+def test_pagerank_observed_masses_are_exact_sums(spark, shuffle_width, monkeypatch):
+    """The only global figures, the dangling masses m_j of the basis
+    vectors, are one exact decimal sum each: each observed m_j equals the
+    order-free sum of the per-node values it covers, so β cannot depend on
+    the order in which rows and task partials reach the aggregate.
+    The per-node contribution sums themselves are doubles, and two runs
+    can still differ in their last bits."""
+    import decimal
+
+    from graphsense_blocksci_spark.operators import graph
+
+    observed, checkpoints = [], []
+
+    class Recording(graph.Observation):
+        @property
+        def get(self):
+            got = super().get
+            observed.append(dict(got))
+            return got
+
+    cls = type(spark.range(1))
+    real_ckpt = cls.localCheckpoint
+
+    def local_checkpoint(self, *args, **kwargs):
+        checkpoints.append(real_ckpt(self, *args, **kwargs))
+        return checkpoints[-1]
+
+    monkeypatch.setattr(graph, "Observation", Recording)
+    monkeypatch.setattr(cls, "localCheckpoint", local_checkpoint)
+    edges, _, _ = _random_digraph()
+    shuffle_width(7)
+    df = spark.createDataFrame(edges, "src: long, dst: long").repartition(5)
+    graph.pagerank(df, iterations=10).collect()
+    masses = [o for o in observed if "m0" in o]
+    assert len(masses) == 1 and len(masses[0]) == 10
+    state = checkpoints[-1].where("_deg IS NULL")
+    cells = state.selectExpr(
+        *(f"CAST(_h{j} AS DECIMAL(38, 36)) AS m{j}" for j in range(10))
+    ).collect()
+    with decimal.localcontext() as exact:
+        exact.prec = 80
+        for j in range(10):
+            want = sum((r[f"m{j}"] for r in cells if r[f"m{j}"] is not None), decimal.Decimal(0))
+            assert masses[0][f"m{j}"] == want, j
 
 
 def test_skyline_2d_matches_quadratic_reference(spark):
