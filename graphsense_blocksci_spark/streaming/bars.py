@@ -1,15 +1,18 @@
 """Stateful streaming OHLC/VWAP bars: the streaming face of the
 q276 batch bar build.
 
-Each (epoch-day, symbol) state cell folds a micro-batch with the
-mergeable bar reduce: open/close are arg-min/arg-max over the unique
-(ts_micros, event_id) event key — ORDER-INDEPENDENT, so late or
+Each (epoch-day, symbol) bar is one streaming aggregate in Spark's
+state store, folding every micro-batch with the mergeable bar
+reduce: open/close are ``min``/``max`` over
+``struct(ts_micros, event_id, cents)`` — arg-min/arg-max over the
+unique (ts_micros, event_id) event key, ORDER-INDEPENDENT, so late or
 reordered batches cannot change the converged bar — high/low are
-max/min, and volume / price*volume are sums. After each batch the
-cell emits its cumulative snapshot tagged with the strictly-growing
-``n_seen``; the freshest snapshot per key (max_by on n_seen) IS the
-exact batch-twin bar, which is what makes the cell-exact oracle
-against q276's SQL possible.
+max/min, and volume / price*volume are sums. In update mode each
+batch emits the bars it touched as cumulative rows tagged with
+``n_seen`` (the bar's running event count, strictly growing); the
+freshest row per key (max_by on n_seen) IS the exact batch-twin bar,
+which is what makes the cell-exact oracle against q276's SQL
+possible.
 
 Scale shape: state is one fixed-width row per (day, symbol) — bounded
 by the bar grid, not the event stream; the per-batch shuffle is the
@@ -18,91 +21,8 @@ groupBy on the bar key.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-BAR_OUTPUT = T.StructType(
-    [
-        T.StructField("day", T.LongType()),
-        T.StructField("symbol", T.StringType()),
-        T.StructField("n_seen", T.LongType()),
-        T.StructField("open_c", T.LongType()),
-        T.StructField("high_c", T.LongType()),
-        T.StructField("low_c", T.LongType()),
-        T.StructField("close_c", T.LongType()),
-        T.StructField("vol", T.LongType()),
-        T.StructField("pv", T.LongType()),
-    ]
-)
-
-# first_* / last_* carry the arg-min / arg-max event keys so merges
-# stay order-independent across micro-batches.
-BAR_STATE = T.StructType(
-    [
-        T.StructField("n_seen", T.LongType()),
-        T.StructField("first_ts", T.LongType()),
-        T.StructField("first_eid", T.LongType()),
-        T.StructField("open_c", T.LongType()),
-        T.StructField("high_c", T.LongType()),
-        T.StructField("low_c", T.LongType()),
-        T.StructField("last_ts", T.LongType()),
-        T.StructField("last_eid", T.LongType()),
-        T.StructField("close_c", T.LongType()),
-        T.StructField("vol", T.LongType()),
-        T.StructField("pv", T.LongType()),
-    ]
-)
-
-
-def _bar_group(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        (n_seen, f_ts, f_eid, open_c, high_c, low_c,
-         l_ts, l_eid, close_c, vol, pv) = (int(x) for x in state.get)
-    else:
-        n_seen = 0
-        f_ts = f_eid = l_ts = l_eid = 0
-        open_c = close_c = 0
-        high_c = -(1 << 62)
-        low_c = 1 << 62
-        vol = pv = 0
-    for pdf in pdfs:
-        for ts, eid, cents, v in zip(
-            pdf["ts_micros"], pdf["event_id"], pdf["cents"], pdf["vol"]
-        ):
-            ts, eid, cents, v = int(ts), int(eid), int(cents), int(v)
-            if n_seen == 0 or (ts, eid) < (f_ts, f_eid):
-                f_ts, f_eid, open_c = ts, eid, cents
-            if n_seen == 0 or (ts, eid) > (l_ts, l_eid):
-                l_ts, l_eid, close_c = ts, eid, cents
-            high_c = max(high_c, cents)
-            low_c = min(low_c, cents)
-            vol += v
-            pv += cents * v
-            n_seen += 1
-    state.update(
-        (n_seen, f_ts, f_eid, open_c, high_c, low_c,
-         l_ts, l_eid, close_c, vol, pv)
-    )
-    yield pd.DataFrame(
-        {
-            "day": [key[0]],
-            "symbol": [key[1]],
-            "n_seen": [n_seen],
-            "open_c": [open_c],
-            "high_c": [high_c],
-            "low_c": [low_c],
-            "close_c": [close_c],
-            "vol": [vol],
-            "pv": [pv],
-        }
-    )
 
 
 def ohlc_stream(
@@ -111,7 +31,9 @@ def ohlc_stream(
     symbol_col: str = "symbol",
 ) -> DataFrame:
     """Fold a (day, symbol, ts_micros, event_id, cents, vol) stream
-    into cumulative per-bar snapshots (see module docstring)."""
+    into cumulative per-bar rows ``(day, symbol, n_seen, open_c,
+    high_c, low_c, close_c, vol, pv)``, a streaming aggregate to drain
+    in update mode (see module docstring)."""
     keyed = events.select(
         F.col(day_col).cast("long").alias("day"),
         F.col(symbol_col).alias("symbol"),
@@ -120,10 +42,27 @@ def ohlc_stream(
         F.col("cents").cast("long").alias("cents"),
         F.col("vol").cast("long").alias("vol"),
     )
-    return keyed.groupBy("day", "symbol").applyInPandasWithState(
-        _bar_group,
-        outputStructType=BAR_OUTPUT,
-        stateStructType=BAR_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    event = F.struct("ts_micros", "event_id", "cents")
+    return (
+        keyed.groupBy("day", "symbol")
+        .agg(
+            F.count(F.lit(1)).alias("n_seen"),
+            F.min(event).alias("first"),
+            F.max("cents").alias("high_c"),
+            F.min("cents").alias("low_c"),
+            F.max(event).alias("last"),
+            F.sum("vol").alias("vol"),
+            F.sum(F.col("cents") * F.col("vol")).alias("pv"),
+        )
+        .select(
+            "day",
+            "symbol",
+            "n_seen",
+            F.col("first.cents").alias("open_c"),
+            "high_c",
+            "low_c",
+            F.col("last.cents").alias("close_c"),
+            "vol",
+            "pv",
+        )
     )

@@ -10,14 +10,15 @@ Sentence split/trim/length-filter/hash are PURE STREAM PROJECTIONS
 28-bit md5), so there is no watermark requirement; rows shuffle to
 their sentence-hash state key.
 
-State per hash: the distinct doc-id list (bounded by ``max_docs`` —
-boilerplate saturates quickly, and once a hash is known-duplicated
-the EXACT membership stops mattering; a saturated hash keeps exact
-``n_occurrences`` but freezes ``n_docs`` at the cap, which the
-docstring contract makes explicit) plus the occurrence count.
+State per hash: the distinct doc-id set plus the occurrence count,
+so ``n_docs`` and ``n_occurrences`` stay exact at any scale and the
+state is O(distinct docs per hash). Why Python state: the doc-id SET
+is what makes a repeated document count once, and Spark's streaming
+aggregates reject ``count(DISTINCT)``; a native
+``size(collect_set(doc_id))`` form is not yet measured against it.
 Emission is snapshot-per-batch with a ``seq``; consumers keep the
 max-seq row per hash, and a single availableNow batch's snapshot IS
-the batch q221 answer (the driver-gate configuration, cap unsaturated).
+the batch q221 answer (the qd51 gate configuration).
 """
 
 from __future__ import annotations
@@ -42,7 +43,6 @@ BP_OUTPUT = T.StructType(
 BP_STATE = T.StructType(
     [
         T.StructField("docs", T.ArrayType(T.LongType())),
-        T.StructField("saturated", T.LongType()),
         T.StructField("occ", T.LongType()),
         T.StructField("seq", T.LongType()),
     ]
@@ -50,27 +50,18 @@ BP_STATE = T.StructType(
 
 
 def _bp_group(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    max_docs: int,
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     if state.exists:
-        docs, saturated, occ, seq = state.get
+        docs, occ, seq = state.get
         doc_set = set(docs)
     else:
-        doc_set, saturated, occ, seq = set(), 0, 0, 0
+        doc_set, occ, seq = set(), 0, 0
     for pdf in pdfs:
         occ += len(pdf)
-        for d in pdf["doc_id"]:
-            if saturated:
-                break
-            doc_set.add(int(d))
-            if len(doc_set) > max_docs:
-                saturated = 1
-                doc_set = set(list(doc_set)[:max_docs])
+        doc_set.update(int(d) for d in pdf["doc_id"])
     seq += 1
-    state.update((sorted(doc_set), int(saturated), int(occ), int(seq)))
+    state.update((sorted(doc_set), int(occ), int(seq)))
     yield pd.DataFrame(
         {
             "sh": [int(key[0])],
@@ -100,21 +91,16 @@ def duplicate_sentences_stream(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_len: int = 20,
-    max_docs: int = 1024,
 ) -> DataFrame:
     """Apply the stateful duplicate-sentence monitor to a STREAMING
     document frame. Returns the snapshot stream
     ``(sh, n_docs, n_occurrences, seq)``; keep the max-seq row per
     hash and filter ``n_docs >= 2`` for the q221 boilerplate
-    worklist. ``n_docs`` is exact until the ``max_docs`` cap, then
-    frozen (saturation — the hash is long since flagged)."""
-
-    def fn(key, pdfs, state):
-        return _bp_group(key, pdfs, state, max_docs)
-
+    worklist. Both counts are exact; state is O(distinct docs per
+    hash)."""
     keyed = _sentence_hashes(docs, text_col, id_col, min_len)
     return keyed.groupBy("sh").applyInPandasWithState(
-        fn,
+        _bp_group,
         outputStructType=BP_OUTPUT,
         stateStructType=BP_STATE,
         outputMode="append",

@@ -3,88 +3,40 @@ q273 batch apply.
 
 Per-key state is the SURVIVOR op under the total order
 (seq, payload_cents, op) — the same total order the batch twin's
-row_number uses — merged with plain max, which is commutative and
-idempotent: batches may arrive in any order, replay, or split
-arbitrarily and the converged survivor is identical, which is what
-makes the cell-exact oracle against q273's SQL possible. Each batch
-the key emits its current survivor tagged with the strictly-growing
-n_seen; the freshest emission per key is the compacted row.
+row_number uses — kept as ``max(struct(seq, payload_cents, op))`` by
+Spark's own streaming aggregate. Max is commutative and idempotent:
+batches may arrive in any order, replay, or split arbitrarily and the
+converged survivor is identical, which is what makes the cell-exact
+oracle against q273's SQL possible. In update mode each batch emits
+the keys it touched, with the survivor tagged by ``n_seen`` (the
+key's running op count, strictly growing); the freshest emission per
+key is the compacted row.
 
 Scale shape: one fixed-width state row per live key — the log
-compaction contract — and the per-batch shuffle is the groupBy(key).
+compaction contract — held in the engine's state store, and the
+per-batch shuffle is the groupBy(key).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-CDC_OUTPUT = T.StructType(
-    [
-        T.StructField("key", T.LongType()),
-        T.StructField("n_seen", T.LongType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("payload_cents", T.LongType()),
-        T.StructField("op", T.StringType()),
-    ]
-)
-
-CDC_STATE = T.StructType(
-    [
-        T.StructField("n_seen", T.LongType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("payload_cents", T.LongType()),
-        T.StructField("op", T.StringType()),
-    ]
-)
-
-
-def _cdc_group(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        n_seen, seq, payload, op = state.get
-        n_seen, seq, payload = int(n_seen), int(seq), int(payload)
-        best = (seq, payload, str(op))
-    else:
-        n_seen = 0
-        best = None
-    for pdf in pdfs:
-        for s, p, o in zip(pdf["seq"], pdf["payload_cents"], pdf["op"]):
-            cand = (int(s), int(p), str(o))
-            if best is None or cand > best:
-                best = cand
-            n_seen += 1
-    state.update((n_seen, best[0], best[1], best[2]))
-    yield pd.DataFrame(
-        {
-            "key": [key[0]],
-            "n_seen": [n_seen],
-            "seq": [best[0]],
-            "payload_cents": [best[1]],
-            "op": [best[2]],
-        }
-    )
 
 
 def cdc_compact_stream(ops: DataFrame, key_col: str = "key") -> DataFrame:
-    """Fold a (key, seq, payload_cents, op) op-log stream into
-    cumulative per-key survivor snapshots (see module docstring)."""
-    keyed = ops.select(
-        F.col(key_col).cast("long").alias("key"),
-        F.col("seq").cast("long").alias("seq"),
-        F.col("payload_cents").cast("long").alias("payload_cents"),
-        F.col("op").cast("string").alias("op"),
+    """Fold a (key, seq, payload_cents, op) op-log stream into per-key
+    survivor rows ``(key, n_seen, seq, payload_cents, op)``, a
+    streaming aggregate to drain in update mode (see module
+    docstring)."""
+    survivor = F.max(
+        F.struct(
+            F.col("seq").cast("long").alias("seq"),
+            F.col("payload_cents").cast("long").alias("payload_cents"),
+            F.col("op").cast("string").alias("op"),
+        )
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _cdc_group,
-        outputStructType=CDC_OUTPUT,
-        stateStructType=CDC_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return (
+        ops.groupBy(F.col(key_col).cast("long").alias("key"))
+        .agg(F.count(F.lit(1)).alias("n_seen"), survivor.alias("s"))
+        .select("key", "n_seen", "s.seq", "s.payload_cents", "s.op")
     )

@@ -19,6 +19,12 @@ Scale shape: one shuffle on the uniform content hash; state size is
 |distinct hashes per watermark window|; checkpointing makes redelivery
 effectively-once (reference analog: PK upsert + retry,
 blocksci_export.py:132-142).
+
+The two near-duplicate pair emitters below (`lsh_pairs_stream`,
+`simhash_pairs_stream`) keep Python state: each emits a pair once,
+when its later member arrives, by matching it against the ids its
+bucket already holds — a join of new rows to stored ones that no
+declared streaming aggregate expresses.
 """
 
 from __future__ import annotations

@@ -1,22 +1,35 @@
-"""Stateful streaming heavy hitters: a sharded Misra-Gries summary in
-the state store.
+"""Streaming sketches over Spark's state store.
 
-The streaming face of `operators/sketches.py:heavy_hitters`: items
-shard by `xxhash64(item) % n_shards` (each item lives in exactly ONE
-shard, so per-item counts never split across state keys); every shard
-keeps a bounded Misra-Gries summary — (items, counts, total) arrays,
+Heavy hitters keep Python state: a sharded Misra-Gries summary.
+Items shard by `xxhash64(item) % n_shards` (each item lives in
+exactly ONE shard, so per-item counts never split across state keys);
+every shard keeps a bounded summary — (items, counts, total) arrays,
 ≤ ``capacity`` entries — in the `applyInPandasWithState` store and
 folds each micro-batch in with the mergeable reduce rule (Agarwal et
-al., PODS'12). After each batch a shard EMITS its current summary
-snapshot, so the sink always holds a bounded, freshest-wins view of
-the stream's frequent items with the standard MG guarantee: any item
-with true running count > total/capacity is present, and
-``approx_count`` undercounts by at most total/capacity.
+al., PODS'12). Capacity eviction (subtract the (capacity+1)-th count,
+drop the non-positive) is a state machine no declared aggregate
+expresses, which is why this one operator stays in Python. After each
+batch a shard EMITS its current summary snapshot, so the sink always
+holds a bounded, freshest-wins view of the stream's frequent items
+with the standard MG guarantee: any item with true running count >
+total/capacity is present, and ``approx_count`` undercounts by at
+most total/capacity. State is O(capacity) per shard over a fixed
+number of shards; emission is candidate-sized, not stream-sized.
 
-Scale shape: state is O(capacity) per shard and the number of shards
-is fixed — the store does NOT grow with the stream. The per-batch
-shuffle is the groupBy(shard), and a batch contributes at most
-|batch| rows to it. Emission is candidate-sized, not stream-sized.
+Every other sketch here is a fold Spark already declares, so it is a
+plain streaming ``groupBy(...).agg(...)`` whose state the engine
+keeps: HDR and Count-Min cells (``count`` per (group, bucket)), HLL
+registers (``max(rho)``), the log2 histogram (``count``), activity
+bitmaps (``bit_or``) and the address lifetime ledger (min, max, count
+and two sums). Bucket ids, registers and masks are computed JVM-side,
+and no row reaches a Python worker. Each merge is commutative, so
+micro-batch boundaries cannot change a cell. These frames are
+aggregates without a watermark: drain them in update mode, where each
+batch emits only the cells it changed, each with its running value.
+Counts, maxima and ORs only grow, so a reader collapses the emitted
+rows per key with the operator's own merge (max of ``cnt``/``rho``,
+``bit_or`` of ``bits``, the row with the largest count), which also
+absorbs a replayed batch.
 """
 
 from __future__ import annotations
@@ -131,44 +144,6 @@ def heavy_hitters_stream(
     )
 
 
-HDR_OUTPUT = T.StructType(
-    [
-        T.StructField("group", T.LongType()),
-        T.StructField("bucket", T.LongType()),
-        T.StructField("cnt", T.LongType()),
-    ]
-)
-
-HDR_STATE = T.StructType(
-    [
-        T.StructField("buckets", T.ArrayType(T.LongType())),
-        T.StructField("counts", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def _hdr_group(
-    key: tuple, pdfs: "Iterator[pd.DataFrame]", state: GroupState
-) -> "Iterator[pd.DataFrame]":
-    acc: dict[int, int] = {}
-    if state.exists:
-        buckets, counts = state.get
-        acc = dict(zip(buckets, counts))
-    for pdf in pdfs:
-        for b, c in pdf.groupby("bucket")["bucket"].count().items():
-            acc[int(b)] = acc.get(int(b), 0) + int(c)
-    state.update(([int(b) for b in acc], [int(c) for c in acc.values()]))
-    if acc:
-        items = sorted(acc.items())
-        yield pd.DataFrame(
-            {
-                "group": key[0],
-                "bucket": [b for b, _ in items],
-                "cnt": [c for _, c in items],
-            }
-        )
-
-
 def hdr_histogram_stream(
     values: DataFrame,
     value_col: str,
@@ -178,18 +153,17 @@ def hdr_histogram_stream(
     """STREAMING mergeable quantile partials: the stateful face of
     `operators/sketches.py:hdr_histogram`. The HDR bucket id is
     computed JVM-side on the stream (the same integer bit arithmetic
-    as the batch operator — the Python state op never sees raw
-    values), rows shuffle to their group's state key, and each group
-    folds its micro-batch bucket counts into the store with a plain
-    per-bucket sum — the merge that CANNOT be order-sensitive, which
-    is exactly why HDR partials and not a rank sketch live in the
-    state store. After each batch a group emits its refreshed
-    histogram snapshot ``(group, bucket, cnt)``; a consumer takes the
-    latest snapshot per group and feeds `hdr_quantiles` unchanged.
+    as the batch operator), and each (group, bucket) cell is a running
+    ``count`` in the state store — the per-bucket sum that CANNOT be
+    order-sensitive, which is exactly why HDR partials and not a rank
+    sketch live in the state store. Each batch emits the cells it
+    changed, ``(group, bucket, cnt)`` with the running count, not the
+    group's whole histogram; the max ``cnt`` per (group, bucket) over
+    all emissions is the histogram, which feeds `hdr_quantiles`
+    unchanged.
 
     State per group is bounded by the VALUE RANGE (≈ sub_bits·64
-    buckets), not the stream length — the same guarantee as the
-    Misra-Gries store above, with zero approximation: snapshot counts
+    cells), not the stream length, with zero approximation: counts
     are always exact running counts (unlike MG under pressure).
     """
     from graphsense_blocksci_spark.operators.sketches import hdr_bucket
@@ -198,13 +172,7 @@ def hdr_histogram_stream(
         F.col(group_col).cast("long").alias("group"),
         hdr_bucket(F.col(value_col), sub_bits).alias("bucket"),
     )
-    return keyed.groupBy("group").applyInPandasWithState(
-        _hdr_group,
-        outputStructType=HDR_OUTPUT,
-        stateStructType=HDR_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed.groupBy("group", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def cms_stream(
@@ -216,20 +184,17 @@ def cms_stream(
     """STREAMING Count-Min sketch: the stateful face of
     `operators/sketches.py:cms_build`. The (hash-row, bucket) cell of
     every occurrence is computed JVM-side with the same md5 arithmetic
-    as the batch operator (the Python state op never sees raw keys);
-    cells shuffle to their hash-row's state key and fold into the
-    store with a plain per-bucket sum — the order-insensitive merge
-    that makes CMS partials safe in a state store (identical argument
-    to the HDR histogram above, and the same stateful fold executes
-    both). After each batch every hash-row emits its refreshed counter
-    snapshot ``(d, bucket, cnt)``; a consumer takes the latest
-    snapshot per row and probes it with
-    `operators/sketches.py:cms_estimate` unchanged.
+    as the batch operator, and each cell is a running ``count`` in the
+    state store — the order-insensitive cell sum that makes CMS
+    partials safe in a state store (the HDR argument above). Each
+    batch emits the cells it changed as ``(group, bucket, cnt)``,
+    where ``group`` is the hash row, not the row's whole counter
+    table; the max ``cnt`` per cell over all emissions is the sketch,
+    which `operators/sketches.py:cms_estimate` probes unchanged.
 
-    State per hash-row is bounded by ``width`` counters — the store
-    never grows with the stream; snapshot counts are exact running
-    cell counts, so a single-batch run reproduces the batch sketch
-    cell-for-cell (the qd26 gate).
+    State is bounded by ``depth × width`` cells — it never grows with
+    the stream; counts are exact running cell counts, so the drained
+    cells reproduce the batch sketch cell-for-cell (the qd26 gate).
     """
     exploded = keys.select(
         F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("_d"),
@@ -248,48 +213,20 @@ def cms_stream(
             % width
         ).alias("bucket"),
     )
-    return keyed.groupBy("group").applyInPandasWithState(
-        _hdr_group,
-        outputStructType=HDR_OUTPUT,
-        stateStructType=HDR_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-HLL_OUTPUT = T.StructType(
-    [
-        T.StructField("bucket", T.LongType()),
-        T.StructField("rho", T.LongType()),
-    ]
-)
-
-HLL_STATE = T.StructType([T.StructField("rho", T.LongType())])
-
-
-def _hll_group(
-    key: tuple, pdfs: "Iterator[pd.DataFrame]", state: GroupState
-) -> "Iterator[pd.DataFrame]":
-    best = int(state.get[0]) if state.exists else 0
-    for pdf in pdfs:
-        if len(pdf):
-            best = max(best, int(pdf["rho"].max()))
-    state.update((best,))
-    yield pd.DataFrame({"bucket": [key[0]], "rho": [best]})
+    return keyed.groupBy("group", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def hll_stream(values: DataFrame, key_col: str, p: int = 8) -> DataFrame:
     """STREAMING HyperLogLog registers: the stateful face of
     `operators/sketches.py:hll_registers`. The (bucket, rho) pair of
     every key is computed JVM-side with the identical md5/shift/bin
-    arithmetic (the Python state op only ever sees small integers);
-    rows shuffle to their bucket's state key and fold in with a plain
-    MAX — the order-insensitive, idempotent merge that makes HLL the
-    canonical mergeable sketch (duplicate keys and replayed batches
-    cannot move a register, so retries are free). After each batch a
-    register emits its refreshed (bucket, rho) snapshot; the latest
-    snapshot per bucket IS the batch register table, which
-    `hll_estimate` consumes unchanged.
+    arithmetic, and each register is a running ``max(rho)`` in the
+    state store — the order-insensitive, idempotent merge that makes
+    HLL the canonical mergeable sketch (duplicate keys and replayed
+    batches cannot move a register). Each batch emits the registers
+    it touched as ``(bucket, rho)``; the max ``rho`` per bucket over
+    all emissions IS the batch register table, which `hll_estimate`
+    consumes unchanged.
 
     State is ONE long per register — at most 2^p state rows total,
     regardless of stream length or cardinality.
@@ -312,46 +249,20 @@ def hll_stream(values: DataFrame, key_col: str, p: int = 8) -> DataFrame:
         .cast("long")
     )
     keyed = values.select((h % F.lit(m)).alias("bucket"), rho.alias("rho"))
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        _hll_group,
-        outputStructType=HLL_OUTPUT,
-        stateStructType=HLL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-LOG2_HIST_OUTPUT = T.StructType(
-    [
-        T.StructField("bucket", T.LongType()),
-        T.StructField("cnt", T.LongType()),
-    ]
-)
-
-LOG2_HIST_STATE = T.StructType([T.StructField("cnt", T.LongType())])
-
-
-def _log2_hist_group(
-    key: tuple, pdfs: "Iterator[pd.DataFrame]", state: GroupState
-) -> "Iterator[pd.DataFrame]":
-    running = int(state.get[0]) if state.exists else 0
-    for pdf in pdfs:
-        running += int(len(pdf))
-    state.update((running,))
-    yield pd.DataFrame({"bucket": [key[0]], "cnt": [running]})
+    return keyed.groupBy("bucket").agg(F.max("rho").alias("rho"))
 
 
 def log2_hist_stream(values: DataFrame, value_col: str) -> DataFrame:
     """STREAMING power-of-2 histogram: the stateful face of the q252
     log2 quantile sketch. The bucket (floor(log2(v)) via
     length(bin(v)) - 1, the libm-free integer form) is computed
-    JVM-side; rows shuffle to their bucket's state key and fold in
-    with a plain running count — addition is the order-insensitive
-    merge that makes histograms the simplest mergeable sketch, so
-    micro-batch boundaries cannot move a cell. After each batch a
-    bucket emits its refreshed (bucket, cnt) snapshot; the latest
-    (= max, counts are monotone) snapshot per bucket is the batch
-    histogram, which the q252 quantile readout consumes unchanged.
+    JVM-side, and each bucket is a running ``count`` in the state
+    store — addition is the order-insensitive merge that makes
+    histograms the simplest mergeable sketch, so micro-batch
+    boundaries cannot move a cell. Each batch emits the buckets it
+    touched as ``(bucket, cnt)``; counts are monotone, so the max per
+    bucket is the batch histogram, which the q252 quantile readout
+    consumes unchanged.
 
     State is ONE long per bucket — at most 64 state rows total,
     regardless of stream length or value distribution.
@@ -361,49 +272,19 @@ def log2_hist_stream(values: DataFrame, value_col: str) -> DataFrame:
         .cast("long")
         .alias("bucket")
     )
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        _log2_hist_group,
-        outputStructType=LOG2_HIST_OUTPUT,
-        stateStructType=LOG2_HIST_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-BITMAP_OUTPUT = T.StructType(
-    [
-        T.StructField("day", T.LongType()),
-        T.StructField("word", T.LongType()),
-        T.StructField("bits", T.LongType()),
-    ]
-)
-
-BITMAP_STATE = T.StructType([T.StructField("bits", T.LongType())])
-
-
-def _bitmap_group(
-    key: tuple, pdfs: "Iterator[pd.DataFrame]", state: GroupState
-) -> "Iterator[pd.DataFrame]":
-    bits = int(state.get[0]) if state.exists else 0
-    for pdf in pdfs:
-        for m in pdf["mask"]:
-            bits |= int(m)
-    state.update((bits,))
-    yield pd.DataFrame(
-        {"day": [key[0]], "word": [key[1]], "bits": [bits]}
-    )
+    return keyed.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def bitmap_or_stream(values: DataFrame, day_col: str, user_col: str) -> DataFrame:
     """STREAMING activity bitmaps: the stateful face of the q253
-    bitmap-retention build. Each (epoch-day, 60-user word) state cell
-    holds one OR-folded long (60-bit payload — the same cross-engine
-    shift-safe width as the batch twin); masks are computed JVM-side
-    and fold with bitwise OR — idempotent and commutative, so
+    bitmap-retention build. Each (epoch-day, 60-user word) cell is a
+    running ``bit_or`` of the users' masks (60-bit payload — the same
+    cross-engine shift-safe width as the batch twin); masks are
+    computed JVM-side, and OR is idempotent and commutative, so
     duplicate events, replayed batches and micro-batch boundaries
-    cannot change a cell. Snapshots emit per batch; OR-ing a key's
-    snapshots (or taking the last) reproduces the batch bitmap
-    exactly.
+    cannot change a cell. Each batch emits the cells it touched as
+    ``(day, word, bits)``; OR-ing a key's emissions (or taking the
+    last) reproduces the batch bitmap exactly.
 
     State is ONE long per (day, word) — bounded by days x users/60,
     not by the event stream.
@@ -413,82 +294,28 @@ def bitmap_or_stream(values: DataFrame, day_col: str, user_col: str) -> DataFram
         F.expr(f"CAST({user_col} DIV 60 AS BIGINT)").alias("word"),
         F.expr(f"shiftleft(1L, CAST({user_col} % 60 AS INT))").alias("mask"),
     )
-    return keyed.groupBy("day", "word").applyInPandasWithState(
-        _bitmap_group,
-        outputStructType=BITMAP_OUTPUT,
-        stateStructType=BITMAP_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-LIFETIME_OUTPUT = T.StructType(
-    [
-        T.StructField("addr", T.StringType()),
-        T.StructField("first_block", T.LongType()),
-        T.StructField("last_block", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("received_value", T.LongType()),
-        T.StructField("spent_value", T.LongType()),
-    ]
-)
-LIFETIME_STATE = T.StructType(
-    [
-        T.StructField("first_block", T.LongType()),
-        T.StructField("last_block", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("received_value", T.LongType()),
-        T.StructField("spent_value", T.LongType()),
-    ]
-)
-
-
-def _lifetime_group(
-    key: tuple, pdfs: "Iterator[pd.DataFrame]", state: GroupState
-) -> "Iterator[pd.DataFrame]":
-    if state.exists:
-        first, last, n, recv, spent = (int(x) for x in state.get)
-    else:
-        first, last, n, recv, spent = None, None, 0, 0, 0
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        lo = int(pdf["blk"].min())
-        hi = int(pdf["blk"].max())
-        first = lo if first is None else min(first, lo)
-        last = hi if last is None else max(last, hi)
-        n += len(pdf)
-        recv += int(pdf["recv"].sum())
-        spent += int(pdf["spent"].sum())
-    state.update((first, last, n, recv, spent))
-    yield pd.DataFrame(
-        {
-            "addr": [key[0]],
-            "first_block": [first],
-            "last_block": [last],
-            "n_events": [n],
-            "received_value": [recv],
-            "spent_value": [spent],
-        }
-    )
+    return keyed.groupBy("day", "word").agg(F.bit_or("mask").alias("bits"))
 
 
 def lifetime_stream(ledger: DataFrame) -> DataFrame:
     """STREAMING per-address lifetime ledger: the stateful face of the
     qd77 batch rollup (minus the distinct-tx count, whose state would
     be a per-address tx SET — the maintained index qd44/qd48 owns that
-    shape). State per address is five mergeable longs (min, max,
-    count, two sums) — each a commutative monoid, so replay and batch
-    boundaries cannot change the fixpoint; the final snapshot per key
-    is the emission with the largest n_events (monotone). Input must
-    carry (addr string, blk long, recv long, spent long).
+    shape). Each address is five running aggregates in the state store
+    (min and max block, event count, received and spent sums) — each a
+    commutative monoid, so replay and batch boundaries cannot change
+    the fixpoint. Each batch emits the addresses it touched as
+    ``(addr, first_block, last_block, n_events, received_value,
+    spent_value)``; the final row per key is the emission with the
+    largest n_events (monotone). Input must carry (addr string, blk
+    long, recv long, spent long).
 
     State is O(addresses), independent of event volume.
     """
-    return ledger.groupBy("addr").applyInPandasWithState(
-        _lifetime_group,
-        outputStructType=LIFETIME_OUTPUT,
-        stateStructType=LIFETIME_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return ledger.groupBy("addr").agg(
+        F.min("blk").alias("first_block"),
+        F.max("blk").alias("last_block"),
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("recv").alias("received_value"),
+        F.sum("spent").alias("spent_value"),
     )

@@ -14,6 +14,9 @@ Scale shape: state is keyed by user_id → partitioned across the
 cluster by the state store; each batch touches only keys present in
 the batch; per-key state is O(1) (one open session), so the store
 size is bounded by |active keys|, not history.
+
+Why Python state: qd18's point is the Python state API itself; the
+native twins sessionize with `F.session_window` (q74, qd102).
 """
 
 from __future__ import annotations

@@ -33,6 +33,9 @@ batch collapses to per-item partials inside the state function
 stateful operator), state size is min(dimension, capacity) per
 group, and emission is (N+1) rows per group per batch — bounded,
 not stream-sized.
+
+Why Python state: the capacity eviction into ``others_floor`` is a
+state machine that no declared streaming aggregate expresses.
 """
 
 from __future__ import annotations

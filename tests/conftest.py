@@ -105,15 +105,15 @@ _SLOW_TESTS = {
     "test_streaming.py::test_stream_stream_join_matches_batch",  # 7.6s
     "test_streaming.py::test_streaming_lsh_pairs_union_equals_batch",  # 7.4s
     "test_setsim.py::test_betweenness_pair_counting_matches_brandes",  # 7.4s
-    "test_round7_props.py::test_log2_hist_stream_multibatch",  # 7.4s
+    "test_streaming.py::test_log2_hist_stream_multibatch",  # 7.4s
     "test_round6_ops.py::test_scc_direction_sensitivity",  # 7.3s
     "test_streaming.py::test_stateful_sessionize_across_batches",  # 7.2s
     "test_graph_pinning.py::test_pagerank_prepartitioned_path_matches_default",  # 7.2s
     "test_properties.py::test_bfs_reachability_random_graphs",  # 7.2s
     "test_round11_wave2.py::test_qd97_equals_batch_reuse_curve",  # 7.1s
     "test_properties.py::test_simhash_pigeonhole_never_misses_a_pair",  # 6.9s
-    "test_round4_ops.py::test_streaming_cms_accumulates_across_batches",  # 6.9s
-    "test_round7_props.py::test_bitmap_or_stream_multibatch",  # 6.9s
+    "test_streaming.py::test_streaming_cms_accumulates_across_batches",  # 6.9s
+    "test_streaming.py::test_bitmap_or_stream_multibatch",  # 6.9s
     "test_properties.py::test_connected_components_random_graphs",  # 6.8s
     "test_round8_props.py::test_kmeans_quantized_matches_float_on_separated_blobs",  # 6.7s
     "test_setsim.py::test_louvain_recovers_planted_cliques",  # 6.7s
@@ -123,7 +123,7 @@ _SLOW_TESTS = {
     "test_operators.py::TestIngestDaemon::test_daemon_catches_up_and_is_idempotent",  # 6.4s
     "test_round4_ops.py::test_multi_source_bfs_matches_per_seed_bfs",  # 6.3s
     "test_streaming.py::test_sessionize_on_rocksdb_state_store",  # 6.3s
-    "test_round4_ops.py::test_streaming_hll_accumulates_across_batches",  # 6.2s
+    "test_streaming.py::test_streaming_hll_accumulates_across_batches",  # 6.2s
     "test_round10_ops.py::test_streaming_dedup_rate_equals_batch_monitor",  # 6.1s
 }
 

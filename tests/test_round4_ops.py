@@ -411,65 +411,6 @@ def test_random_walks_large_node_ids(spark):
         assert all((a, b) in edges for a, b in zip(nodes, nodes[1:])), r["path"]
 
 
-# ----------------------------------------------------- streaming HDR state
-
-
-def test_streaming_hdr_accumulates_across_batches(spark, tmp_path):
-    """Two micro-batches: the batch-2 snapshot histogram per group must
-    equal the batch operator's histogram over BOTH batches — the
-    per-bucket-sum merge has no pressure/approximation case at all."""
-    from graphsense_blocksci_spark.operators.sketches import hdr_histogram
-    from graphsense_blocksci_spark.streaming.sketches import hdr_histogram_stream
-
-    rng = random.Random(21)
-    b1 = [(i % 3, rng.randrange(0, 100000)) for i in range(400)]
-    b2 = [(i % 3, rng.randrange(0, 100000)) for i in range(300)]
-    src = tmp_path / "hdr_src"
-    src.mkdir()
-    ckpt, sink = str(tmp_path / "hdr_ckpt"), str(tmp_path / "hdr_out")
-    spark.createDataFrame(b1, "day long, cents long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "f1"))
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("day long, cents long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "*"))
-        )
-        q = (
-            hdr_histogram_stream(stream, "cents", "day")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    spark.createDataFrame(b2, "day long, cents long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "f2"))
-    run_once()
-
-    out = spark.read.schema("group long, bucket long, cnt long").parquet(sink)
-    # counts only grow: the final snapshot per (group, bucket) is the max
-    final = {
-        (r["group"], r["bucket"]): r["cnt"]
-        for r in out.groupBy("group", "bucket")
-        .agg(F.max("cnt").alias("cnt"))
-        .collect()
-    }
-    both = spark.createDataFrame(b1 + b2, "day long, cents long")
-    want = {
-        (r["day"], r["bucket"]): r["cnt"]
-        for r in hdr_histogram(both, "cents", group_cols=("day",)).collect()
-    }
-    assert final == want
-
-
 # --------------------------------------------------------------- KMV sketch
 
 
@@ -559,74 +500,6 @@ def test_multi_source_bfs_matches_per_seed_bfs(spark):
     assert multi == single
 
 
-def test_streaming_cms_accumulates_across_batches(spark, tmp_path):
-    """Two micro-batches: the final CMS snapshot must equal the batch
-    sketch over BOTH batches — cell sums merge with no approximation
-    case, and estimates probed from the streamed sketch match the
-    batch-built sketch exactly."""
-    from graphsense_blocksci_spark.operators.sketches import (
-        cms_build,
-        cms_estimate,
-    )
-    from graphsense_blocksci_spark.streaming.sketches import cms_stream
-
-    b1 = [(i % 17,) for i in range(300)]
-    b2 = [(i % 11,) for i in range(200)]
-    src = tmp_path / "cms_src"
-    src.mkdir()
-    ckpt, sink = str(tmp_path / "cms_ckpt"), str(tmp_path / "cms_out")
-    spark.createDataFrame(b1, "k long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "f1"))
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("k long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "*"))
-        )
-        q = (
-            cms_stream(stream, "k", depth=3, width=64)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    spark.createDataFrame(b2, "k long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "f2"))
-    run_once()
-
-    out = spark.read.schema("group long, bucket long, cnt long").parquet(sink)
-    # counts only grow: final snapshot per cell is the max
-    final = (
-        out.groupBy("group", "bucket")
-        .agg(F.max("cnt").alias("cnt"))
-        .select(F.col("group").alias("d"), "bucket", "cnt")
-    )
-    both = spark.createDataFrame(b1 + b2, "k long")
-    want = cms_build(both, "k", depth=3, width=64)
-    assert sorted(map(tuple, final.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-    # probing the streamed sketch gives the batch estimates
-    keys = both.distinct()
-    est_stream = {
-        r.k: r.est
-        for r in cms_estimate(final, keys, "k", depth=3, width=64).collect()
-    }
-    est_batch = {
-        r.k: r.est
-        for r in cms_estimate(want, keys, "k", depth=3, width=64).collect()
-    }
-    assert est_stream == est_batch
-
-
 def test_msf_boruvka_matches_kruskal_reference(spark):
     """Borůvka under the (w, a, b) total order must produce THE unique
     minimum spanning forest — checked edge-for-edge against a python
@@ -681,52 +554,3 @@ def test_msf_boruvka_matches_kruskal_reference(spark):
     nodes = {x for e in simple for x in e}
     comps = len({find(x) for x in nodes})
     assert len(got) == len(nodes) - comps
-
-
-def test_streaming_hll_accumulates_across_batches(spark, tmp_path):
-    """Two micro-batches: the latest streamed register snapshot per
-    bucket must equal the batch register table over BOTH batches —
-    the per-bucket MAX merge is idempotent and order-free, so
-    replayed/duplicated input cannot move a register."""
-    from graphsense_blocksci_spark.operators.sketches import hll_registers
-    from graphsense_blocksci_spark.streaming.sketches import hll_stream
-
-    b1 = [(i * 7 + 3,) for i in range(400)]
-    b2 = [(i * 13 + 1,) for i in range(300)]
-    src = tmp_path / "hll_src"
-    src.mkdir()
-    ckpt, sink = str(tmp_path / "hll_ckpt"), str(tmp_path / "hll_out")
-    spark.createDataFrame(b1, "k long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "f1"))
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("k long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "*"))
-        )
-        q = (
-            hll_stream(stream, "k", p=6)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    spark.createDataFrame(b2, "k long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "f2"))
-    run_once()
-    out = spark.read.schema("bucket long, rho long").parquet(sink)
-    # latest snapshot per bucket = max rho emitted (rho only grows)
-    final = out.groupBy("bucket").agg(F.max("rho").alias("rho"))
-    both = spark.createDataFrame(b1 + b2, "k long")
-    want = hll_registers(both, "k", p=6)
-    assert sorted(map(tuple, final.collect())) == sorted(
-        map(tuple, want.collect())
-    )

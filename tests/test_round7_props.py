@@ -272,51 +272,6 @@ def test_cohens_kappa_degenerate_null(spark):
     assert r2["kappa_den"] == 50 and r2["kappa"] == 0.0
 
 
-# -- streaming log2 histogram vs pandas value_counts ----------------
-
-
-def test_log2_hist_stream_multibatch(spark, tmp_path):
-    """Three source files consumed one per trigger: the state-store
-    merge across micro-batch boundaries must reproduce the exact
-    batch histogram (floor(log2) buckets, full counts)."""
-    import random
-
-    from graphsense_blocksci_spark.streaming.sketches import log2_hist_stream
-
-    rng = random.Random(11)
-    vals = [rng.randint(1, 1 << 40) for _ in range(3000)]
-    src = str(tmp_path / "src")
-    for i in range(3):
-        spark.createDataFrame(
-            [(v,) for v in vals[i * 1000 : (i + 1) * 1000]], "cents long"
-        ).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema("cents long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        log2_hist_stream(stream, "cents")
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    snaps = spark.read.schema("bucket long, cnt long").parquet(
-        str(tmp_path / "out")
-    )
-    got = {
-        r["bucket"]: r["cnt"]
-        for r in snaps.groupBy("bucket").agg(F.max("cnt").alias("cnt")).collect()
-    }
-    want: dict[int, int] = {}
-    for v in vals:
-        want[v.bit_length() - 1] = want.get(v.bit_length() - 1, 0) + 1
-    assert got == want
-
-
 def test_bitmap_word_packing_exact(spark):
     """bit_or-packed 60-bit activity words intersect to the exact
     set-intersection cardinality for random day/user activity."""
@@ -355,51 +310,3 @@ def test_bitmap_word_packing_exact(spark):
     for d in range(3):
         want = len(days[d] & days[d + 1])
         assert got.get(d, 0) == want, f"day {d}"
-
-
-def test_bitmap_or_stream_multibatch(spark, tmp_path):
-    """OR-folded bitmap state across three micro-batches must equal
-    the batch per-day distinct-user counts exactly (OR idempotence:
-    duplicate users across batches cannot inflate DAU)."""
-    import random
-
-    from graphsense_blocksci_spark.streaming.sketches import bitmap_or_stream
-
-    rng = random.Random(31)
-    rows = [
-        (rng.randint(0, 3), rng.randint(0, 400)) for _ in range(900)
-    ]
-    src = str(tmp_path / "src")
-    for i in range(3):
-        spark.createDataFrame(
-            rows[i * 300 : (i + 1) * 300], "eday long, u long"
-        ).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema("eday long, u long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        bitmap_or_stream(stream, "eday", "u")
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    snaps = spark.read.schema("day long, word long, bits long").parquet(
-        str(tmp_path / "out")
-    )
-    got = {
-        r["day"]: r["dau"]
-        for r in snaps.groupBy("day", "word")
-        .agg(F.expr("bit_or(bits)").alias("bits"))
-        .groupBy("day")
-        .agg(F.sum(F.bit_count("bits")).cast("long").alias("dau"))
-        .collect()
-    }
-    want: dict[int, set[int]] = {}
-    for d, u in rows:
-        want.setdefault(d, set()).add(u)
-    assert got == {d: len(us) for d, us in want.items()}

@@ -1,127 +1,117 @@
-"""Hypothesis property tests for the stateful streaming group
-functions: their correctness contract is ORDER-INDEPENDENT,
-SPLIT-INDEPENDENT convergence (any batching of the same rows ends in
-the same state), which is exactly what lets qd60/qd70 oracle
-cell-exactly against their batch twins. Tested here as pure functions
-with a fake GroupState — no Spark session, so hypothesis can hammer
+"""Batching invariance of the stateful streaming folds: any batching
+of the same rows must converge to the same state, which is exactly
+what lets qd60/qd70 oracle cell-exactly against their batch twins.
+
+The native aggregates (bars, CDC) are checked end to end, by draining
+the same seeded rows as one file and as three shuffled files. The
+Misra-Gries reduce, which keeps Python state, is checked as a pure
+function under hypothesis — no Spark session, so it can hammer
 hundreds of cases in seconds."""
 
 from __future__ import annotations
+
+import random
 
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-
-class FakeState:
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
+from graphsense_blocksci_spark import queries
 
 
-def _run_groups(fn, key, batches, columns):
-    state = FakeState()
-    out = None
-    for batch in batches:
-        pdf = pd.DataFrame(batch, columns=columns)
-        out = list(fn(key, iter([pdf]), state))[-1]
-    return state._v, out
-
-
-# (ts_micros, event_id) is the UNIQUE event key by contract (event_id
-# is a PK in the source) — arg-min/arg-max are only well-defined with
-# it, so the strategy generates unique keys.
-events = st.lists(
-    st.tuples(
-        st.integers(0, 1_000_000),      # ts_micros
-        st.integers(0, 10_000),         # event_id
-        st.integers(-10_000, 10_000),   # cents
-        st.integers(1, 7),              # vol
-    ),
-    min_size=1,
-    max_size=30,
-    unique_by=lambda r: (r[0], r[1]),
-)
-
-
-@given(events, st.randoms())
-@settings(max_examples=150, deadline=None)
-def test_bar_group_batching_invariant(rows, rng):
-    """Any shuffling + re-batching of the same events converges to
-    the same bar state as one big batch."""
-    from graphsense_blocksci_spark.streaming.bars import _bar_group
-
-    cols = ["ts_micros", "event_id", "cents", "vol"]
-    base_state, _ = _run_groups(_bar_group, (0, "s"), [rows], cols)
-
-    shuffled = list(rows)
-    rng.shuffle(shuffled)
-    cuts = sorted(
-        rng.sample(range(1, len(shuffled)), min(3, len(shuffled) - 1))
-    ) if len(shuffled) > 1 else []
-    batches = []
-    prev = 0
-    for c in cuts + [len(shuffled)]:
-        batches.append(shuffled[prev:c])
-        prev = c
-    split_state, _ = _run_groups(
-        _bar_group, (0, "s"), [b for b in batches if b], cols
+def _drain_final(spark, work, op, schema, batches, key_cols):
+    """Stage each of `batches` as one parquet file, drain `op` over
+    them one file per trigger, and return the freshest emitted row
+    (max ``n_seen``) per key as ``{key: row tuple}``."""
+    src = f"{work}/src"
+    for rows in batches:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
     )
-    assert split_state == base_state
-    # and the state equals the direct batch-semantics reference
-    n, f_ts, f_eid, open_c, high_c, low_c, l_ts, l_eid, close_c, vol, pv = (
-        base_state
-    )
-    ordered = sorted(rows, key=lambda r: (r[0], r[1]))
-    assert n == len(rows)
-    assert open_c == ordered[0][2]
-    assert close_c == ordered[-1][2]
-    assert high_c == max(r[2] for r in rows)
-    assert low_c == min(r[2] for r in rows)
-    assert vol == sum(r[3] for r in rows)
-    assert pv == sum(r[2] * r[3] for r in rows)
+    queries._drain_updates_to_out(op(stream), work, op.__name__)
+    final = {}
+    for r in spark.read.parquet(f"{work}/out").collect():
+        key = tuple(r[c] for c in key_cols)
+        if key not in final or r["n_seen"] > final[key]["n_seen"]:
+            final[key] = r
+    return {k: tuple(r) for k, r in final.items()}
 
 
-ops = st.lists(
-    st.tuples(
-        st.integers(0, 50),                     # seq
-        st.integers(-10_000, 10_000),           # payload_cents
-        st.sampled_from(["U", "D"]),            # op
-    ),
-    min_size=1,
-    max_size=30,
-)
+def test_ohlc_and_cdc_streams_batching_invariant(spark, tmp_path):
+    """The same seeded rows, drained as one file and as three shuffled
+    files read one per trigger, end in identical final rows; each bar
+    equals its batch-semantics reference, and each CDC survivor is
+    the key's max (seq, payload_cents, op)."""
+    from graphsense_blocksci_spark.streaming.bars import ohlc_stream
+    from graphsense_blocksci_spark.streaming.cdc import cdc_compact_stream
 
+    rng = random.Random(41)
+    # event_id is unique, so (ts_micros, event_id) is the unique event
+    # key arg-min/arg-max need; few timestamps force ts ties
+    events = [
+        (rng.randrange(3), rng.choice("abc"), rng.randrange(40), eid,
+         rng.randint(-10_000, 10_000), rng.randint(1, 7))
+        for eid in range(300)
+    ]
+    ops = [
+        (rng.randrange(15), rng.randrange(30), rng.randint(-10_000, 10_000),
+         rng.choice("UD"))
+        for _ in range(300)
+    ]
 
-@given(ops, st.randoms())
-@settings(max_examples=150, deadline=None)
-def test_cdc_group_batching_invariant(rows, rng):
-    """The survivor under (seq, payload, op) max-merge is identical
-    for any batching/ordering, and equals the total-order maximum."""
-    from graphsense_blocksci_spark.streaming.cdc import _cdc_group
+    def three_shuffled(rows):
+        rows = list(rows)
+        rng.shuffle(rows)
+        a, b = sorted(rng.sample(range(1, len(rows)), 2))
+        return [rows[:a], rows[a:b], rows[b:]]
 
-    cols = ["seq", "payload_cents", "op"]
-    base_state, _ = _run_groups(_cdc_group, (7,), [rows], cols)
+    cases = [
+        (ohlc_stream, "day long, symbol string, ts_micros long,"
+         " event_id long, cents long, vol long", events, ("day", "symbol")),
+        (cdc_compact_stream, "key long, seq long, payload_cents long,"
+         " op string", ops, ("key",)),
+    ]
+    finals = []
+    for op, schema, rows, keys in cases:
+        one = _drain_final(
+            spark, str(tmp_path / f"{op.__name__}_1"), op, schema, [rows], keys
+        )
+        three = _drain_final(
+            spark, str(tmp_path / f"{op.__name__}_3"), op, schema,
+            three_shuffled(rows), keys,
+        )
+        assert one == three, op.__name__
+        finals.append(one)
+    bars, survivors = finals
 
-    shuffled = list(rows)
-    rng.shuffle(shuffled)
-    mid = rng.randint(0, len(shuffled))
-    batches = [b for b in (shuffled[:mid], shuffled[mid:]) if b]
-    split_state, _ = _run_groups(_cdc_group, (7,), batches, cols)
-    assert split_state == base_state
-    n_seen, seq, payload, op = base_state
-    assert n_seen == len(rows)
-    assert (seq, payload, op) == max(rows)
+    by_bar: dict = {}
+    for day, sym, ts, eid, cents, vol in events:
+        by_bar.setdefault((day, sym), []).append((ts, eid, cents, vol))
+    assert set(bars) == set(by_bar)
+    for key, evs in by_bar.items():
+        ordered = sorted(evs)
+        assert bars[key] == (
+            *key,
+            len(evs),
+            ordered[0][2],
+            max(e[2] for e in evs),
+            min(e[2] for e in evs),
+            ordered[-1][2],
+            sum(e[3] for e in evs),
+            sum(e[2] * e[3] for e in evs),
+        ), key
+
+    by_key: dict = {}
+    for key, seq, payload, op in ops:
+        by_key.setdefault(key, []).append((seq, payload, op))
+    assert set(survivors) == {(k,) for k in by_key}
+    for key, tuples in by_key.items():
+        assert survivors[(key,)] == (key, len(tuples), *max(tuples)), key
 
 
 mg_items = st.lists(
@@ -160,53 +150,3 @@ def test_misra_gries_merge_guarantee(items, capacity, rng):
         assert approx >= t - bound - 1e-9, (item, t, approx, bound)
         if t > bound:
             assert item in counts.index
-
-
-@given(
-    st.lists(st.integers(0, 60), min_size=1, max_size=40),
-    st.randoms(),
-)
-@settings(max_examples=150, deadline=None)
-def test_hll_register_batching_invariant(rhos, rng):
-    """The HLL register state (max rho per bucket) is order- and
-    split-invariant and equals the plain max."""
-    from graphsense_blocksci_spark.streaming.sketches import _hll_group
-
-    base_state, _ = _run_groups(
-        _hll_group, (3,), [[(r,) for r in rhos]], ["rho"]
-    )
-    shuffled = list(rhos)
-    rng.shuffle(shuffled)
-    mid = rng.randint(0, len(shuffled))
-    batches = [
-        [(r,) for r in b]
-        for b in (shuffled[:mid], shuffled[mid:])
-        if b
-    ]
-    split_state, out = _run_groups(_hll_group, (3,), batches, ["rho"])
-    assert split_state == base_state == (max(rhos),)
-    assert out["rho"].iloc[0] == max(rhos)
-
-
-@given(
-    st.lists(st.integers(0, 5), min_size=1, max_size=40),
-    st.randoms(),
-)
-@settings(max_examples=100, deadline=None)
-def test_log2_hist_split_invariant(marks, rng):
-    """The per-bucket count state sums identically across any
-    batching."""
-    from graphsense_blocksci_spark.streaming.sketches import (
-        _log2_hist_group,
-    )
-
-    rows = [(m,) for m in marks]
-    base_state, _ = _run_groups(_log2_hist_group, (9,), [rows], ["v"])
-    rng.shuffle(rows)
-    mid = rng.randint(0, len(rows))
-    batches = [b for b in (rows[:mid], rows[mid:]) if b]
-    split_state, out = _run_groups(
-        _log2_hist_group, (9,), batches, ["v"]
-    )
-    assert split_state == base_state == (len(marks),)
-    assert out["cnt"].iloc[0] == len(marks)

@@ -3,9 +3,11 @@
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
-from graphsense_blocksci_spark import fixtures
+from graphsense_blocksci_spark import fixtures, queries
 from graphsense_blocksci_spark.streaming import (
     stream_block_stats,
     stream_transactions,
@@ -673,3 +675,351 @@ def test_streaming_lsh_pairs_union_equals_batch(spark, tmp_path):
     assert got_pairs == want
     # cross-boundary pair present: doc 3 (batch 2) near-dups doc 1
     assert (1, 3) in got_pairs
+
+
+# ------------------------------------------- native streaming aggregates
+# Multi-batch drains of the sketches that run as Spark's own streaming
+# aggregates: `queries._drain_updates_to_out` drains them in update
+# mode, and each reader collapses the emitted rows per key.
+
+
+def test_streaming_hdr_accumulates_across_batches(spark, tmp_path):
+    """Two micro-batches: the emitted cells, collapsed by max cnt per
+    (group, bucket), must equal the batch operator's histogram over
+    BOTH batches — the per-bucket-sum merge has no
+    pressure/approximation case at all."""
+    from graphsense_blocksci_spark.operators.sketches import hdr_histogram
+    from graphsense_blocksci_spark.streaming.sketches import hdr_histogram_stream
+
+    rng = random.Random(21)
+    b1 = [(i % 3, rng.randrange(0, 100000)) for i in range(400)]
+    b2 = [(i % 3, rng.randrange(0, 100000)) for i in range(300)]
+    src = tmp_path / "hdr_src"
+    src.mkdir()
+    work = str(tmp_path / "hdr")
+    spark.createDataFrame(b1, "day long, cents long").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(str(src / "f1"))
+
+    def run_once():
+        stream = (
+            spark.readStream.schema("day long, cents long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "*"))
+        )
+        queries._drain_updates_to_out(
+            hdr_histogram_stream(stream, "cents", "day"), work, "hdr"
+        )
+
+    run_once()
+    spark.createDataFrame(b2, "day long, cents long").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(str(src / "f2"))
+    run_once()
+
+    out = spark.read.schema("group long, bucket long, cnt long").parquet(
+        f"{work}/out"
+    )
+    # counts only grow: the final snapshot per (group, bucket) is the max
+    final = {
+        (r["group"], r["bucket"]): r["cnt"]
+        for r in out.groupBy("group", "bucket")
+        .agg(F.max("cnt").alias("cnt"))
+        .collect()
+    }
+    both = spark.createDataFrame(b1 + b2, "day long, cents long")
+    want = {
+        (r["day"], r["bucket"]): r["cnt"]
+        for r in hdr_histogram(both, "cents", group_cols=("day",)).collect()
+    }
+    assert final == want
+
+
+def test_streaming_cms_accumulates_across_batches(spark, tmp_path):
+    """Two micro-batches: the final CMS snapshot must equal the batch
+    sketch over BOTH batches — cell sums merge with no approximation
+    case, and estimates probed from the streamed sketch match the
+    batch-built sketch exactly."""
+    from graphsense_blocksci_spark.operators.sketches import (
+        cms_build,
+        cms_estimate,
+    )
+    from graphsense_blocksci_spark.streaming.sketches import cms_stream
+
+    b1 = [(i % 17,) for i in range(300)]
+    b2 = [(i % 11,) for i in range(200)]
+    src = tmp_path / "cms_src"
+    src.mkdir()
+    work = str(tmp_path / "cms")
+    spark.createDataFrame(b1, "k long").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(str(src / "f1"))
+
+    def run_once():
+        stream = (
+            spark.readStream.schema("k long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "*"))
+        )
+        queries._drain_updates_to_out(
+            cms_stream(stream, "k", depth=3, width=64), work, "cms"
+        )
+
+    run_once()
+    spark.createDataFrame(b2, "k long").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(str(src / "f2"))
+    run_once()
+
+    out = spark.read.schema("group long, bucket long, cnt long").parquet(
+        f"{work}/out"
+    )
+    # counts only grow: final snapshot per cell is the max
+    final = (
+        out.groupBy("group", "bucket")
+        .agg(F.max("cnt").alias("cnt"))
+        .select(F.col("group").alias("d"), "bucket", "cnt")
+    )
+    both = spark.createDataFrame(b1 + b2, "k long")
+    want = cms_build(both, "k", depth=3, width=64)
+    assert sorted(map(tuple, final.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+    # probing the streamed sketch gives the batch estimates
+    keys = both.distinct()
+    est_stream = {
+        r.k: r.est
+        for r in cms_estimate(final, keys, "k", depth=3, width=64).collect()
+    }
+    est_batch = {
+        r.k: r.est
+        for r in cms_estimate(want, keys, "k", depth=3, width=64).collect()
+    }
+    assert est_stream == est_batch
+
+
+def test_streaming_hll_accumulates_across_batches(spark, tmp_path):
+    """Two micro-batches: the latest streamed register snapshot per
+    bucket must equal the batch register table over BOTH batches —
+    the per-bucket MAX merge is idempotent and order-free, so
+    replayed/duplicated input cannot move a register."""
+    from graphsense_blocksci_spark.operators.sketches import hll_registers
+    from graphsense_blocksci_spark.streaming.sketches import hll_stream
+
+    b1 = [(i * 7 + 3,) for i in range(400)]
+    b2 = [(i * 13 + 1,) for i in range(300)]
+    src = tmp_path / "hll_src"
+    src.mkdir()
+    work = str(tmp_path / "hll")
+    spark.createDataFrame(b1, "k long").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(str(src / "f1"))
+
+    def run_once():
+        stream = (
+            spark.readStream.schema("k long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "*"))
+        )
+        queries._drain_updates_to_out(
+            hll_stream(stream, "k", p=6), work, "hll"
+        )
+
+    run_once()
+    spark.createDataFrame(b2, "k long").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(str(src / "f2"))
+    run_once()
+    out = spark.read.schema("bucket long, rho long").parquet(f"{work}/out")
+    # latest snapshot per bucket = max rho emitted (rho only grows)
+    final = out.groupBy("bucket").agg(F.max("rho").alias("rho"))
+    both = spark.createDataFrame(b1 + b2, "k long")
+    want = hll_registers(both, "k", p=6)
+    assert sorted(map(tuple, final.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+
+
+def test_log2_hist_stream_multibatch(spark, tmp_path):
+    """Three source files consumed one per trigger: the state-store
+    merge across micro-batch boundaries must reproduce the exact
+    batch histogram (floor(log2) buckets, full counts)."""
+    import random
+
+    from graphsense_blocksci_spark.streaming.sketches import log2_hist_stream
+
+    rng = random.Random(11)
+    vals = [rng.randint(1, 1 << 40) for _ in range(3000)]
+    src = str(tmp_path / "src")
+    for i in range(3):
+        spark.createDataFrame(
+            [(v,) for v in vals[i * 1000 : (i + 1) * 1000]], "cents long"
+        ).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema("cents long")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    queries._drain_updates_to_out(log2_hist_stream(stream, "cents"), str(tmp_path), "log2")
+    snaps = spark.read.schema("bucket long, cnt long").parquet(
+        str(tmp_path / "out")
+    )
+    got = {
+        r["bucket"]: r["cnt"]
+        for r in snaps.groupBy("bucket").agg(F.max("cnt").alias("cnt")).collect()
+    }
+    want: dict[int, int] = {}
+    for v in vals:
+        want[v.bit_length() - 1] = want.get(v.bit_length() - 1, 0) + 1
+    assert got == want
+
+
+def test_bitmap_or_stream_multibatch(spark, tmp_path):
+    """OR-folded bitmap state across three micro-batches must equal
+    the batch per-day distinct-user counts exactly (OR idempotence:
+    duplicate users across batches cannot inflate DAU)."""
+    import random
+
+    from graphsense_blocksci_spark.streaming.sketches import bitmap_or_stream
+
+    rng = random.Random(31)
+    rows = [
+        (rng.randint(0, 3), rng.randint(0, 400)) for _ in range(900)
+    ]
+    src = str(tmp_path / "src")
+    for i in range(3):
+        spark.createDataFrame(
+            rows[i * 300 : (i + 1) * 300], "eday long, u long"
+        ).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema("eday long, u long")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    queries._drain_updates_to_out(bitmap_or_stream(stream, "eday", "u"), str(tmp_path), "bitmap")
+    snaps = spark.read.schema("day long, word long, bits long").parquet(
+        str(tmp_path / "out")
+    )
+    got = {
+        r["day"]: r["dau"]
+        for r in snaps.groupBy("day", "word")
+        .agg(F.expr("bit_or(bits)").alias("bits"))
+        .groupBy("day")
+        .agg(F.sum(F.bit_count("bits")).cast("long").alias("dau"))
+        .collect()
+    }
+    want: dict[int, set[int]] = {}
+    for d, u in rows:
+        want.setdefault(d, set()).add(u)
+    assert got == {d: len(us) for d, us in want.items()}
+
+
+def test_update_drain_replay_after_lost_commit_keeps_reader_results(
+    spark, sf_dir, monkeypatch
+):
+    """`foreachBatch` is at-least-once: a batch re-run after its rows
+    landed but before the checkpoint recorded its commit appends them
+    again. Each registry reader collapses the rows per key with its
+    aggregate's merge, so every entry's result is unchanged."""
+    from pathlib import Path
+
+    names = (
+        "qd25_streaming_hdr_quantiles",
+        "qd26_streaming_count_min",
+        "qd33_streaming_hll",
+        "qd70_streaming_cdc",
+    )
+
+    def run(name):
+        return sorted(map(tuple, queries.QUERIES[name](spark, sf_dir).collect()))
+
+    want = {name: run(name) for name in names}
+    drain = queries._drain_updates_to_out
+    replayed = {}
+
+    def drain_and_replay_last_batch(df, work, name):
+        drain(df, work, name)
+        n_rows = spark.read.parquet(f"{work}/out").count()
+        commits = Path(work) / "ckpt" / "commits"
+        last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+        (commits / str(last)).unlink()
+        (commits / f".{last}.crc").unlink(missing_ok=True)
+        drain(df, work, name)
+        replayed[name] = spark.read.parquet(f"{work}/out").count() - n_rows
+
+    monkeypatch.setattr(queries, "_drain_updates_to_out", drain_and_replay_last_batch)
+    for name in names:
+        assert run(name) == want[name], name
+    # the replay really appended the batch's rows a second time
+    assert sorted(replayed) == ["qd25", "qd26", "qd33", "qd70"]
+    assert all(n > 0 for n in replayed.values()), replayed
+
+
+def test_native_stream_operators_plan_an_aggregate_not_python_state(
+    spark, tmp_path
+):
+    """The eight folds Spark declares run as its own streaming
+    aggregate: each analyzed plan has an `Aggregate` and no
+    `FlatMapGroupsInPandasWithState`, and keeps its output schema."""
+    from graphsense_blocksci_spark.streaming.bars import ohlc_stream
+    from graphsense_blocksci_spark.streaming.cdc import cdc_compact_stream
+    from graphsense_blocksci_spark.streaming.sketches import (
+        bitmap_or_stream,
+        cms_stream,
+        hdr_histogram_stream,
+        heavy_hitters_stream,
+        hll_stream,
+        lifetime_stream,
+        log2_hist_stream,
+    )
+
+    cols = (
+        "key long, seq long, payload_cents long, op string, day long,"
+        " symbol string, ts_micros long, event_id long, cents long,"
+        " vol long, addr string, blk long, recv long, spent long, u long"
+    )
+    src = str(tmp_path / "src")
+    spark.createDataFrame([], cols).write.parquet(src)
+    s = spark.readStream.schema(cols).parquet(src)
+    cells = "group bigint, bucket bigint, cnt bigint"
+    frames = {
+        "cdc": (
+            cdc_compact_stream(s),
+            "key bigint, n_seen bigint, seq bigint, payload_cents bigint,"
+            " op string",
+        ),
+        "ohlc": (
+            ohlc_stream(s),
+            "day bigint, symbol string, n_seen bigint, open_c bigint,"
+            " high_c bigint, low_c bigint, close_c bigint, vol bigint,"
+            " pv bigint",
+        ),
+        "lifetime": (
+            lifetime_stream(s),
+            "addr string, first_block bigint, last_block bigint,"
+            " n_events bigint, received_value bigint, spent_value bigint",
+        ),
+        "hll": (hll_stream(s, "u"), "bucket bigint, rho bigint"),
+        "log2": (log2_hist_stream(s, "cents"), "bucket bigint, cnt bigint"),
+        "bitmap": (
+            bitmap_or_stream(s, "day", "u"),
+            "day bigint, word bigint, bits bigint",
+        ),
+        "hdr": (hdr_histogram_stream(s, "cents", "day"), cells),
+        "cms": (cms_stream(s, "u"), cells),
+    }
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    for name, (df, schema) in frames.items():
+        plan = analyzed(df)
+        assert df.isStreaming, name
+        assert "FlatMapGroupsInPandasWithState" not in plan, name
+        assert "Aggregate" in plan, name
+        got = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
+        assert got == schema, name
+    # the pin can see Python state: Misra-Gries keeps it
+    assert "FlatMapGroupsInPandasWithState" in analyzed(
+        heavy_hitters_stream(s, col="symbol")
+    )
